@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._worker import task_entry
+
 
 def total_edge_weight(edges: DataFrame) -> DataFrame:
     """A1 edgeWeight (inc/properties.hxx:96-106) → one row (total_w);
@@ -178,6 +180,7 @@ def renumber_map_distributed(memb: DataFrame, num_partitions: int = 32):
         offsets[pid] = acc
         acc += counts.get(pid, 0)
 
+    @task_entry
     def rank(batches):
         rows = [b for b in batches]
         if not rows:

@@ -52,6 +52,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ._worker import task_entry
 from .kernel import CsrGraph, LeidenOptions, leiden_exact
 from .materialize import materialize as _materialize_reset
 from .sweep import DriverState, sweep_partition
@@ -249,6 +250,7 @@ def _memb_from_positions_fn(bc):
     |V| rows."""
     import pandas as pd
 
+    @task_entry
     def gen(batches):
         v = bc.value
         vid, dense = v["vid"], v["dense"]
@@ -265,6 +267,7 @@ def _compose_np_fn(bc):
     numpy replacement for the _compose broadcast-join exchange."""
     import pandas as pd
 
+    @task_entry
     def gen(batches):
         v = bc.value
         vid, dense = v["vid"], v["dense"]
@@ -391,27 +394,26 @@ def _driver_finish(spark: SparkSession, g: DataFrame, R: float, E: float,
     """Finish a small (post-coarsening) graph with the deterministic kernel
     on the driver — mirrors the reference's own switch to a packed CSR after
     pass 1 (inc/leiden.hxx:1249-1250). Returns (memb_df, n_vertices, sub)."""
+    import pandas as pd
+
     pdf = g.toPandas()
-    vid = np.unique(np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]))
-    src_i = np.searchsorted(vid, pdf["src"].to_numpy())
-    dst_i = np.searchsorted(vid, pdf["dst"].to_numpy())
-    triples = sorted(zip(src_i.tolist(), dst_i.tolist(), pdf["w"].tolist()))
-    csr = CsrGraph.__new__(CsrGraph)
-    indptr = [0] * (len(vid) + 1)
-    dsts, ws = [], []
-    j = 0
-    for u in range(len(vid)):
-        while j < len(triples) and triples[j][0] == u:
-            dsts.append(triples[j][1]); ws.append(triples[j][2]); j += 1
-        indptr[u + 1] = len(dsts)
-    csr.span, csr.indptr, csr.dst, csr.w = len(vid), indptr, dsts, ws
-    csr.exists = [True] * len(vid)
+    src, dst = pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+    w = pdf["w"].to_numpy(np.float64)
+    vid = np.unique(np.concatenate([src, dst]))
+    src_i = np.searchsorted(vid, src)
+    dst_i = np.searchsorted(vid, dst)
+    # CSR rows in (src, dst, w) order — the kernel's adjacency order
+    order = np.lexsort((w, dst_i, src_i))
+    indptr = np.concatenate(([0], np.cumsum(np.bincount(src_i, minlength=len(vid)))))
+    csr = CsrGraph(len(vid), indptr.tolist(), dst_i[order].tolist(), w[order].tolist(),
+                   [True] * len(vid))
     sub = leiden_exact(csr, LeidenOptions(
         resolution=R, tolerance=E, aggregation_tolerance=o.aggregation_tolerance,
         tolerance_drop=o.tolerance_drop, max_iterations=o.max_iterations,
         max_passes=max(o.max_passes - passes_used, 1)), refine=refine)
-    memb_rows = [(int(vid[i]), int(sub.membership[i])) for i in range(len(vid))]
-    memb_df = spark.createDataFrame(memb_rows, "id long, community long")
+    memb_df = spark.createDataFrame(
+        pd.DataFrame({"id": vid, "community": np.asarray(sub.membership, dtype=np.int64)}),
+        "id long, community long")
     return memb_df, len(vid), sub
 
 
@@ -687,7 +689,8 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                  rounds_vertex_threshold: int = 300_000_000) -> LeidenRunResult:
     """Distributed Leiden (``refine=True``) / Louvain (``refine=False``).
 
-    ``edges`` must be symmetric and deduplicated (sources/edges.py).
+    ``edges`` must be symmetric and deduplicated (sources/edges.py); a
+    distributed pass raises ``ValueError`` on a dst with no edges of its own.
     ``num_partitions`` fixes the sweep partitioning (determinism across core
     counts). ``driver_threshold``: aggregated graphs at or below this many
     edge rows finish on the driver with the deterministic kernel.

@@ -15,7 +15,10 @@ Spark loop gets slower even though I checkpoint".
 leaf with default statistics (bounded, non-compounding). The cost is that
 Catalyst sees the leaf as default-sized and will not auto-broadcast it —
 iterative loops must place explicit ``F.broadcast`` hints on relations
-they know are small (ours already do).
+they know are small. The Leiden loops (operators/leiden.py) do; the
+companion loops (operators/companions.py) hint only PageRank's one-row
+dangling-mass join, so their other joins against materialized relations
+plan as shuffle joins.
 """
 
 from __future__ import annotations

@@ -40,6 +40,7 @@ except ImportError:
     _PILImage = None
 
 from ..functions import png as _png  # vendored from-scratch PNG codec
+from ._worker import task_entry
 
 
 def _decode_image(payload: bytes) -> np.ndarray:
@@ -77,6 +78,7 @@ def image_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
     shape: one pandas batch per ~batch_hint rows (spark.sql.execution.arrow
     .maxRecordsPerBatch governs; set by caller for large payloads)."""
 
+    @task_entry
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             imgs = [_decode_image(p) for p in b["payload"]]
@@ -101,6 +103,7 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     Executor-side mapInPandas — no driver hop, batch shape set by
     spark.sql.execution.arrow.maxRecordsPerBatch."""
 
+    @task_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.png import encode_png_gray, resize_nearest
         for b in batches:
@@ -143,6 +146,7 @@ def audio_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
     Executor-side mapInPandas (Arrow batches); WAV payloads take the real
     decode, unknown codecs the deterministic fake."""
 
+    @task_entry
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             rows = {"media_id": [], "sample_rate": [], "duration_s": [],
@@ -196,6 +200,7 @@ def frame_mean_luma(frames: DataFrame) -> DataFrame:
     deterministic fake) inside Arrow batches. Turns sample_frames' binary
     output into a hashable numeric relation for the correctness gate."""
 
+    @task_entry
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             yield pd.DataFrame({
@@ -247,6 +252,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     deterministic stub (leading payload bytes) so pipelines stay testable.
     Executor-side mapInPandas; one output row per sampled timestamp."""
 
+    @task_entry
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             rows = {"media_id": [], "frame_idx": [], "frame": []}

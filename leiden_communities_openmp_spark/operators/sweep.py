@@ -1,8 +1,10 @@
 """Partitioned Gauss-Seidel sweep — the engine's scale-mode move kernel.
 
 Spark analogue of the reference's per-thread asynchronous local-moving
-(leidenMoveOmpW, inc/leiden.hxx:646-668): the edge table is hash-partitioned
-by ``src`` so every vertex's full adjacency lives in exactly one partition;
+(leidenMoveOmpW, inc/leiden.hxx:646-668): the edge table is range-partitioned
+by ``src`` into contiguous, degree-balanced vertex-id blocks
+(operators/leiden.py ``_range_partition_edges``), so every vertex's full
+adjacency lives in exactly one partition, sorted by (src, dst, w);
 each partition task runs a block-Gauss-Seidel sweep over its own vertices
 against a broadcast snapshot of (membership, vtot, ctot), applying moves to
 its *local* copy as it goes (the same stale-read tolerance as the
@@ -33,6 +35,8 @@ parallelism, never the computation.
 from __future__ import annotations
 
 import numpy as np
+
+from ._worker import task_entry
 
 
 class DriverState:
@@ -114,6 +118,7 @@ def _run_c_sweep(ck, nu, nv, u_start, dstp, w, upos, commp, vtot, ctot,
        p(ever_moved), p(acc_gain), p(blocked))
 
 
+@task_entry
 def sweep_partition(pdf_iter, state: dict, M: float, R: float, E: float,
                     max_local_iters: int, refine: bool, direction: int = 0,
                     block: int = 8192):
@@ -158,7 +163,17 @@ def sweep_partition(pdf_iter, state: dict, M: float, R: float, E: float,
     bound = state.get("bound") if refine else None         # raw ids, by pos
 
     src = edf["src"].to_numpy(np.int64)
-    dstp = np.searchsorted(vid, edf["dst"].to_numpy(np.int64))
+    dst = edf["dst"].to_numpy(np.int64)
+    dstp = np.searchsorted(vid, dst)
+    # vid is the src set, so on a symmetric edge table every dst has a
+    # position; otherwise an id past the end reads out of bounds in the C
+    # sweep and one between two ids silently takes its neighbour's position
+    bad = vid[np.minimum(dstp, nv - 1)] != dst
+    if bad.any():
+        raise ValueError(
+            f"leiden_scale: {int(bad.sum())} edge rows point at vertices with no "
+            f"edges of their own (e.g. dst={int(dst[bad][0])}); the edge table "
+            "must be symmetric — run it through sources.edges.symmetricize_df first")
     w = edf["w"].to_numpy(np.float64)
 
     u_ids, u_counts = np.unique(src, return_counts=True)

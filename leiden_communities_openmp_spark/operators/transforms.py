@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.edges import dedup_keep_last, symmetricize_df  # T1/S5 re-export
+from ._worker import task_entry
 
 
 def transpose(edges: DataFrame) -> DataFrame:
@@ -76,6 +77,7 @@ def dfs_preorder(edges: DataFrame, source: int) -> DataFrame:
 
     src_v = int(source)
 
+    @task_entry
     def run(pdfs):
         parts = [p for p in pdfs]
         adj: dict[int, list[int]] = {}

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
+from ..operators._worker import task_entry
+
 _ANCHOR_RE = r"(?s)<a\s[^>]*>.*?</a>"
 _TAG_RE = r"(?s)<[^>]+>"
 _WS_RE = r"\s+"
@@ -37,6 +39,7 @@ def _decode(html: pd.Series) -> pd.Series:
 
 
 @pandas_udf(StringType())
+@task_entry
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """html (binary) → visible text: anchor elements removed entirely,
     remaining tags stripped, whitespace collapsed, ends trimmed. The
@@ -50,6 +53,7 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 
 
 @pandas_udf(ArrayType(StringType()))
+@task_entry
 def extract_outlinks_udf(html: pd.Series) -> pd.Series:
     """html (binary) → list of href targets in document order."""
     return _decode(html).str.findall(_HREF_RE)

@@ -85,3 +85,21 @@ def test_checkpoint_resume(spark, tmp_path):
     rb = {r["id"]: r["community"] for r in resumed.membership.collect()}
     assert ra == rb
     assert math.isclose(full.modularity, resumed.modularity, abs_tol=1e-12)
+
+
+@pytest.mark.parametrize("rows", [
+    # directed path: the last dst (40) sorts past every src id
+    [(i, i + 1, 1.0) for i in range(40)],
+    # symmetric even-id ring plus one directed edge 0→3: 3 sorts between
+    # two src ids and would alias vertex 4's position
+    [(a, b, 1.0) for i in range(0, 40, 2)
+     for a, b in ((i, (i + 2) % 40), ((i + 2) % 40, i))] + [(0, 3, 1.0)],
+], ids=["dst-past-end", "dst-between-ids"])
+def test_asymmetric_input_rejected(spark, rows):
+    """A dst with no edges of its own (an unsymmetrized table) is rejected
+    inside the sweep task with an error that reaches the driver — not a
+    segfault in the C sweep, not a silent mis-read of a neighbour."""
+    edges = spark.createDataFrame(rows, "src long, dst long, w double")
+    with pytest.raises(Exception, match="symmetricize_df"):
+        leiden_scale(spark, edges, LeidenOptions(), driver_threshold=0,
+                     driver_vertex_threshold=0, num_partitions=4)
