@@ -53,8 +53,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._worker import task_entry
+from .aggregations import renumber_map_distributed
 from .kernel import CsrGraph, LeidenOptions, leiden_exact
-from .materialize import materialize as _materialize_reset
+from .materialize import materialize
 from .sweep import DriverState, sweep_partition
 
 _MOVES_SCHEMA = "id long, community_new long, gain double, blocked int"
@@ -146,15 +147,6 @@ class LeidenRunResult:
     iterations: int
     M: float
     metrics: list[dict] = field(default_factory=list)
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Cut lineage inside iterative loops — eager localCheckpoint PLUS a
-    stats reset (operators/materialize.py): Spark 4's checkpoint carries
-    the origin plan's size statistics into the new leaf, and a loop that
-    re-joins its own checkpoints compounds them geometrically until the
-    driver stalls in BigInteger stats arithmetic."""
-    return _materialize_reset(df)
 
 
 def vertex_weights(edges: DataFrame) -> DataFrame:
@@ -417,31 +409,37 @@ def _driver_finish(spark: SparkSession, g: DataFrame, R: float, E: float,
     return memb_df, len(vid), sub
 
 
-def _renumber_distributed(spark: SparkSession, memb: DataFrame,
-                          num_partitions: int = 32):
-    """Order-preserving dense renumber (R2, inc/leiden.hxx:1000-1005)
-    WITHOUT driver-side vertex state — the Spark analogue of the reference's
-    exclusive scan (R1, inc/_vector.hxx:1496-1536): distinct community ids
-    range-partitioned ascending, per-partition local rank, plus an
-    exclusive scan of the (tiny, one-per-partition) partition counts.
-    Returns ((community, cnew) relabel map, distinct community count).
+def _committed_counts(checkpointer, p: int, g: DataFrame) -> tuple[int, int]:
+    """(edge rows, vertices) of committed pass ``p``'s graph ``g``, from its
+    ``_metrics.json``; a key the pass was written without is counted."""
+    meta = checkpointer.meta(p)
+    n_edges = meta.get("edge_rows")
+    n_vertices = meta.get("vertices")
+    if n_edges is None:
+        n_edges = g.count()
+    if n_vertices is None:
+        n_vertices = g.select("src").distinct().count()
+    return int(n_edges), int(n_vertices)
 
-    Scale: the only driver traffic is num_partitions count rows; everything
-    else is one range shuffle over the distinct-community set. (A global
-    ``dense_rank`` window would funnel all communities through ONE task.)
 
-    Shared with the standalone renumber operator — see
-    aggregations.renumber_map_distributed."""
-    from .aggregations import renumber_map_distributed
-
-    return renumber_map_distributed(memb, num_partitions)
+def _checkpoint_handoff(spark: SparkSession, checkpointer, p: int, ucom: DataFrame,
+                        g: DataFrame, E: float, total_iters: int, metrics: list,
+                        n_vertices: int):
+    """The pass handoff of a resumable run: commit pass ``p`` from the
+    UNMATERIALIZED dendrogram and aggregate plans — each Parquet write is
+    the one Spark job that computes its relation — and continue from the
+    committed files, exactly as a resume from ``p`` would. Returns
+    (ucom, g, n_edges, n_vertices) for the next pass."""
+    checkpointer.save(p, ucom, g, E, total_iters, metrics, vertices=n_vertices)
+    ucom, g = checkpointer.load(spark, p)
+    return (ucom, g) + _committed_counts(checkpointer, p, g)
 
 
 def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOptions,
                  R: float, refine: bool, local_iters: int, driver_threshold: int,
                  driver_vertex_threshold: int, num_partitions: int,
                  metrics: list, verbose: bool, checkpointer=None,
-                 start=(0, None, None, None, 0),
+                 start=(0, None, None, None, 0, None, None),
                  aff_seed_fraction: float = 0.02):
     """Pure-DataFrame pass loop (``rounds`` strategy) — the ≥10⁹-vertex
     fallback with NO driver-side per-vertex state: membership, vertex
@@ -461,18 +459,25 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
     around its anchor (each accepted mover shares an edge with c inside the
     bound), so the well-connectedness guarantee survives without the
     reference's sequential rollback (inc/leiden.hxx:536-548).
+
+    ``start`` is (pass, ucom, g, E, total_iters, n_edges, n_vertices) — the
+    counts of ``g`` when known (None: count). Returns (ucom, passes,
+    total_iters, q), where q is the driver kernel's modularity when the run
+    ends there, else None.
     """
-    p, ucom, g, E, total_iters = start
+    p, ucom, g, E, total_iters, n_edges, n_vertices = start
     g = edges0 if g is None else g
     E = o.tolerance if E is None else E
-    n_vertices: int | None = None
+    q = None
     while True:
         t0 = time.time()
-        n_edges = g.count()
+        if n_edges is None:
+            n_edges = g.count()
         if n_edges <= driver_threshold or (
                 n_vertices is not None and n_vertices <= driver_vertex_threshold):
             memb_df, n_vid, sub = _driver_finish(spark, g, R, E, o, refine, p)
-            ucom = _materialize(memb_df if ucom is None else _compose(ucom, memb_df, n_vid))
+            ucom = materialize(memb_df if ucom is None else _compose(ucom, memb_df, n_vid))
+            q = sub.modularity
             total_iters += sub.iterations
             p += sub.passes
             metrics.append({"pass": p, "strategy": "driver-kernel",
@@ -481,7 +486,7 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                             "pass_seconds": round(time.time() - t0, 3)})
             break
 
-        vt = _materialize(vertex_weights(g))               # A2
+        vt = materialize(vertex_weights(g))               # A2
         gn = vt.count()
         big = gn > _BROADCAST_VERTEX_LIMIT
         # pure projections of the checkpointed vt — no extra materialization
@@ -550,11 +555,11 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                 # chain re-BUILDS its broadcast relations (a nested job each)
                 # at every reference — measured 2× slower than the one
                 # localCheckpoint per round it would save
-                memb = _materialize(
+                memb = materialize(
                     memb.join(mv_sel, "id", "left")
                     .select("id", F.coalesce("community_new", "community").alias("community")))
                 # materialized: the next round's plan reads ctot twice
-                ctot = _materialize(community_weights(memb, vt))
+                ctot = materialize(community_weights(memb, vt))
             # affected-set pruning once the frontier is small: rescan only
             # the last full cycle's movers + direction-blocked vertices and
             # their neighbors — a vertex activated (or blocked) in round r
@@ -567,7 +572,7 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                     seed = seed.unionByName(r_)
                 nb = g.join(seed.select(F.col("id").alias("dst")), "dst",
                             "left_semi").select(F.col("src").alias("id"))
-                seed_nbrs = _materialize(seed.unionByName(nb).distinct())
+                seed_nbrs = materialize(seed.unionByName(nb).distinct())
             else:
                 seed_nbrs = None
             while len(cached) > 4:    # keep the seed window computable
@@ -629,24 +634,24 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                     break
                 acc_sel = (F.broadcast(acc)
                            if n_acc <= _broadcast_row_limit(spark) else acc)
-                memb_r = _materialize(
+                memb_r = materialize(
                     memb_r.join(acc_sel, "id", "left")
                     .select("id", F.coalesce("community_new", "community").alias("community")))
                 # ctot_r feeds the NEXT refine round only — skip it after
                 # the last one (one fewer action per pass)
                 if rr < 2:
-                    ctot_r = _materialize(community_weights(memb_r, vt))
+                    ctot_r = materialize(community_weights(memb_r, vt))
                 mv.unpersist()
             memb = memb_r
         t_ref = time.time() - t_ref0
 
         total_iters += max(move_iters, 1)
         p += 1
-        relab, cn = _renumber_distributed(spark, memb, num_partitions)   # R1+R2
-        relab = _materialize(relab)
-        memb_dense = _materialize(
+        relab, cn = renumber_map_distributed(memb, num_partitions)   # R1+R2
+        relab = materialize(relab)
+        memb_dense = materialize(
             memb.join(relab, "community").select("id", F.col("cnew").alias("community")))
-        ucom = _materialize(memb_dense if ucom is None else _compose(ucom, memb_dense, None))
+        ucom = memb_dense if ucom is None else _compose(ucom, memb_dense, None)
         rec = {"pass": p, "strategy": "rounds", "move_iterations": move_iters,
                "vertices": gn, "communities": cn, "edges": int(n_edges),
                "tolerance": E, "refine_seconds": round(t_ref, 3),
@@ -658,20 +663,26 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
         if verbose:
             print(f"[leiden_scale/rounds] pass={p} iters={move_iters} GN={gn} CN={cn} "
                   f"E={E:g} ({time.time() - t0:.1f}s)")
-        if move_iters <= 1 or p >= o.max_passes or float(cn) / gn >= o.aggregation_tolerance:
+        stop = move_iters <= 1 or p >= o.max_passes or float(cn) / gn >= o.aggregation_tolerance
+        if stop or checkpointer is None:
+            ucom = materialize(ucom)
+        if stop:
             break
         # aggregate (A9) with the dense relabel
         ms = memb_dense.select(F.col("id").alias("src"), F.col("community").alias("cs"))
         md = memb_dense.select(F.col("id").alias("dst"), F.col("community").alias("cd"))
-        g = _materialize(
+        g = (
             g.join(ms, "src").join(md, "dst")
             .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
             .agg(F.sum("w").alias("w")))
-        n_vertices = cn
         E /= o.tolerance_drop
         if checkpointer is not None:
-            checkpointer.save(p, ucom, g, E, total_iters, metrics)
-    return ucom, p, total_iters
+            ucom, g, n_edges, n_vertices = _checkpoint_handoff(
+                spark, checkpointer, p, ucom, g, E, total_iters, metrics, cn)
+        else:
+            g = materialize(g)
+            n_edges, n_vertices = None, cn
+    return ucom, p, total_iters, q
 
 
 # ---------------------------------------------------------------------------
@@ -695,7 +706,8 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     counts). ``driver_threshold``: aggregated graphs at or below this many
     edge rows finish on the driver with the deterministic kernel.
     ``checkpointer``: plans.checkpoint.CheckpointManager for per-super-step
-    persistence + resume.
+    persistence + resume; its committed files are the run's state between
+    passes (each pass's checkpoint write is its materialization).
 
     ``aff_seed_fraction``: a round is aff-seeded (rescan only recent
     movers+blocked and their neighbors) when that union is below this
@@ -729,9 +741,10 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
 
     t_setup = time.time()
     # NOT persisted: the raw edge relation is scanned a handful of times
-    # (M, strategy probe, pass-1 vertex weights, pass-1 repartition, final
-    # modularity) and each scan is column-pruned off the caller's source
-    # (parquet / localCheckpoint). Caching it costs a full block-manager
+    # (M, strategy probe, pass-1 vertex weights, pass-1 repartition, and the
+    # final modularity of a run whose last pass is distributed) and each
+    # scan is column-pruned off the caller's source (parquet /
+    # localCheckpoint). Caching it costs a full block-manager
     # write — measurably the largest non-scaling chunk of the pass loop at
     # bench scale — and at the 100 TB target the edge relation cannot be
     # cached at all; the per-pass materialized `part_edges` is the real
@@ -766,19 +779,20 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
         v_estimate = n_est
         metrics.append({"phase": "strategy", "chosen": strategy, "v_estimate": n_est})
     if strategy == "rounds":
-        start = (0, None, None, None, 0)
+        start = (0, None, None, None, 0, None, None)
         if checkpointer is not None:
             resumed = checkpointer.latest(spark)
             if resumed is not None:
                 rp, rucom, rg, rE, rti, metrics = resumed
-                start = (rp, _materialize(rucom), _materialize(rg), rE, rti)
-        ucom, p, total_iters = _rounds_loop(
+                start = (rp, rucom, rg, rE, rti) + _committed_counts(checkpointer, rp, rg)
+        ucom, p, total_iters, q = _rounds_loop(
             spark, edges0, M, o, R, refine, local_iters, driver_threshold,
             driver_vertex_threshold, num_partitions, metrics, verbose,
             checkpointer=checkpointer, start=start,
             aff_seed_fraction=aff_seed_fraction)
         t_q = time.time()
-        q = modularity_df(edges0, ucom, M, R, n_vertices=v_estimate)
+        if q is None:
+            q = modularity_df(edges0, ucom, M, R, n_vertices=v_estimate)
         metrics.append({"phase": "final_modularity", "seconds": round(time.time() - t_q, 3)})
         return LeidenRunResult(ucom, q, p, total_iters, M, metrics)
 
@@ -788,15 +802,6 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     total_iters = 0
     p = 0
     E = o.tolerance
-
-    if checkpointer is not None:
-        resumed = checkpointer.latest(spark)
-        if resumed is not None:
-            p, ucom, g, E, total_iters, metrics = resumed
-            ucom = _materialize(ucom)
-            g = _materialize(g)
-            if verbose:
-                print(f"[leiden_scale] resumed at pass={p}")
 
     # seed the pass-1 routing decision with the strategy probe's HLL vertex
     # estimate (deterministic for a given input): a small-vertex graph takes
@@ -808,11 +813,21 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     # borderline graphs between two correct paths. driver_threshold=0 is
     # the "force distributed" contract (tests/benchmarks) — honor it by
     # not seeding.
-    n_vertices: int | None = (
-        v_estimate if p == 0 and driver_threshold > 0 else None)
+    n_vertices: int | None = v_estimate if driver_threshold > 0 else None
     n_orig: int | None = None  # exact original-V row count (final-Q broadcast hint)
     carried: tuple | None = None        # (vid, vtot) for passes ≥ 2
-    carried_edges: int | None = None    # known row count of a lazy multigraph g
+    carried_edges: int | None = None    # known row count of g (lazy multigraph
+                                        # relabel or committed pass)
+    q: float | None = None              # the driver kernel's Q, if it finishes
+    if checkpointer is not None:
+        resumed = checkpointer.latest(spark)
+        if resumed is not None:
+            p, ucom, g, E, total_iters, metrics = resumed
+            # restore the strategy-selection state so a resumed run takes
+            # the same execution path (and thus produces identical labels)
+            carried_edges, n_vertices = _committed_counts(checkpointer, p, g)
+            if verbose:
+                print(f"[leiden_scale] resumed at pass={p}")
     pending_unpersist: DataFrame | None = None  # prev pass's part_edges feeding a lazy g
     prev_lazy = False                   # was the previous pass's handoff lazy?
     part_edges: DataFrame | None = None
@@ -823,16 +838,12 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     # under the deferred plan. Drained once the next pass's shuffle has
     # consumed the plan; final cleanup in the finally block.
     rel_keepalive: list = []
-    if checkpointer is not None and p > 0:
-        # restore the strategy-selection state so a resumed run takes the
-        # same execution path (and thus produces identical labels)
-        n_vertices = g.select("src").distinct().count()
     try:
         while True:
             t0 = time.time()
-            # a multigraph relabel preserves the row count, so the previous
-            # pass already knows this pass's n_edges — no count job on the
-            # (deliberately lazy) relabel plan
+            # a multigraph relabel preserves the row count, and a committed
+            # pass records it, so the previous pass (or the resume) already
+            # knows this pass's n_edges — no count job
             n_edges = carried_edges if carried_edges is not None else g.count()
             carried_edges = None
 
@@ -845,9 +856,10 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                 if pending_unpersist is not None:
                     pending_unpersist.unpersist()
                     pending_unpersist = None
-                if ucom is None:
-                    n_orig = n_vid
-                ucom = _materialize(memb_df if ucom is None else _compose(ucom, memb_df, n_vid))
+                ucom = materialize(memb_df if ucom is None else _compose(ucom, memb_df, n_vid))
+                # exact: aggregation keeps every intra-community weight and
+                # every community total, and the super-graph's M is the input's
+                q = sub.modularity
                 total_iters += sub.iterations
                 p += sub.passes
                 metrics.append({"pass": p, "strategy": "driver-kernel",
@@ -1228,14 +1240,15 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                              "id long, community long"))
             if ucom is None:
                 n_orig = gn
-                ucom = _materialize(memb_df)
+                ucom_plan = memb_df
             else:
-                ucom = _materialize(
-                    ucom.mapInPandas(_compose_np_fn(bc_rel),
-                                     "id long, community long"))
-            rec["renumber_seconds"] = round(time.time() - t_ren, 3)
-
+                ucom_plan = ucom.mapInPandas(_compose_np_fn(bc_rel),
+                                             "id long, community long")
             stop = move_iters <= 1 or p >= o.max_passes or float(cn) / gn >= o.aggregation_tolerance
+            # a resumable run's checkpoint write materializes ucom (handoff
+            # below); a stop pass writes nothing after it
+            ucom = materialize(ucom_plan) if stop or checkpointer is None else ucom_plan
+            rec["renumber_seconds"] = round(time.time() - t_ren, 3)
             if stop:
                 part_edges.unpersist()
                 break
@@ -1272,15 +1285,25 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
             # salted two-stage variant.
             multigraph = (not heavy and gn <= _BROADCAST_VERTEX_LIMIT
                           and cn >= 0.1 * gn)
-            lazy_now = False
             if heavy:
-                g = _materialize(
+                g = (
                     joined.withColumn("_salt", F.pmod(F.xxhash64("src"), F.lit(16)))
                     .groupBy("cs", "cd", "_salt").agg(F.sum("w").alias("w"))
                     .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
                     .agg(F.sum("w").alias("w"))
                 )
             elif multigraph:
+                g = joined.select(F.col("cs").alias("src"), F.col("cd").alias("dst"),
+                                  F.col("w").cast("double").alias("w"))
+            else:
+                g = (
+                    joined.groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
+                    .agg(F.sum("w").alias("w"))
+                )
+            # a resumable run hands the aggregate plan, whichever it is, to
+            # its checkpoint write (below), which runs it exactly once
+            lazy_now = checkpointer is None and multigraph and not prev_lazy
+            if lazy_now:
                 # LAZY handoff: the relabel is a map-side broadcast join with
                 # the SAME row count as its input, and its only consumer is the
                 # next pass's range-partition shuffle — materializing it here
@@ -1289,29 +1312,11 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                 # fuses into the next shuffle's map stage (one O(E) scan, zero
                 # intermediate writes), the known row count rides along (no
                 # count job), and the persisted input partitions stay alive
-                # until the next pass's shuffle has consumed them. Lineage depth
-                # grows by one broadcast join per consecutive multigraph pass —
-                # in practice only the noisy pass 1 takes this path (later
-                # passes collapse well and keep the grouped materialize).
-                g = joined.select(F.col("cs").alias("src"), F.col("cd").alias("dst"),
-                                  F.col("w").cast("double").alias("w"))
-                lazy_now = True
-                if checkpointer is not None:
-                    # resumable runs persist the aggregated graph anyway; a lazy
-                    # plan would execute the join once per checkpoint write AND
-                    # once in the next pass — materialize to keep it single-run
-                    g = _materialize(g)
-                    lazy_now = False
-                elif prev_lazy:
-                    # cap consecutive lazy handoffs at 1: a chain of
-                    # unmaterialized broadcast joins means a lost/evicted cache
-                    # block on a real cluster recomputes through every
-                    # unpersisted previous pass — materialize the 2nd-in-a-row
-                    # to cut the lineage (in practice only pass 1 is lazy; this
-                    # is the 100 TB-cluster guard)
-                    g = _materialize(g)
-                    lazy_now = False
-                elif p >= 2 or sym_input:
+                # until the next pass's shuffle has consumed them (released
+                # there). In practice only the noisy pass 1 takes this path
+                # (later passes collapse well and keep the grouped materialize).
+                pending_unpersist = part_edges
+                if p >= 2 or sym_input:
                     # the relabel joins are row-preserving ONLY if every dst id
                     # has a membership row: true by construction on passes ≥ 2
                     # (vid is the dense 0..C-1 universe) and on pass 1 iff the
@@ -1323,24 +1328,23 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                     carried_edges = int(n_edges)
                 # else: keep the lazy plan but carry NO count — the next pass's
                 # g.count() re-measures truthfully (asymmetric-input pass 1)
-            else:
-                g = _materialize(
-                    joined.groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-                    .agg(F.sum("w").alias("w"))
-                )
+            elif checkpointer is None:
+                # grouped aggregates, and a multigraph right after a lazy one:
+                # consecutive lazy handoffs are capped at 1, since a chain of
+                # unmaterialized broadcast joins means a lost/evicted cache
+                # block on a real cluster recomputes through every
+                # unpersisted previous pass (the 100 TB-cluster guard)
+                g = materialize(g)
             prev_lazy = lazy_now
-            if lazy_now:
-                # g still references part_edges' cached partitions; they are
-                # released only after the next pass's shuffle consumes them
-                pending_unpersist = part_edges
-            else:
-                part_edges.unpersist()
             rec["aggregate_seconds"] = round(time.time() - t_agg, 3)
             rec["aggregate_salted"] = heavy
             rec["aggregate_multigraph"] = multigraph
             E /= o.tolerance_drop
             if checkpointer is not None:
-                checkpointer.save(p, ucom, g, E, total_iters, metrics)
+                ucom, g, carried_edges, n_vertices = _checkpoint_handoff(
+                    spark, checkpointer, p, ucom, g, E, total_iters, metrics, n_vertices)
+            if not lazy_now:
+                part_edges.unpersist()
     finally:
         # abnormal-exit cleanup (ADVICE r4): an exception between a lazy
         # handoff and the next pass otherwise leaks the persisted
@@ -1361,7 +1365,8 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
         rel_keepalive.clear()
 
     t_q = time.time()
-    q = modularity_df(edges0, ucom, M, R, n_vertices=n_orig)
+    if q is None:
+        q = modularity_df(edges0, ucom, M, R, n_vertices=n_orig)
     metrics.append({"phase": "final_modularity", "seconds": round(time.time() - t_q, 3)})
     return LeidenRunResult(ucom, q, p, total_iters, M, metrics)
 

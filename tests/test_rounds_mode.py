@@ -17,9 +17,7 @@ from pyspark.sql import functions as F
 from leiden_communities_openmp_spark.operators import aggregations as agg
 from leiden_communities_openmp_spark.operators.graphgen import block_circulant
 from leiden_communities_openmp_spark.operators.kernel import LeidenOptions
-from leiden_communities_openmp_spark.operators.leiden import (
-    _renumber_distributed, leiden_scale,
-)
+from leiden_communities_openmp_spark.operators.leiden import leiden_scale
 from leiden_communities_openmp_spark.sources.edges import symmetricize_df
 from leiden_communities_openmp_spark.sources.mtx import read_mtx_spark
 
@@ -81,7 +79,7 @@ def test_renumber_distributed_dense_order_preserving(spark):
     with the old community ids, across range-partition boundaries."""
     memb = spark.range(1000).select(
         F.col("id"), ((F.col("id") * 37) % 91 + 1_000_000).alias("community"))
-    relab, cn = _renumber_distributed(spark, memb, num_partitions=7)
+    relab, cn = agg.renumber_map_distributed(memb, num_partitions=7)
     rows = {r["community"]: r["cnew"] for r in relab.collect()}
     olds = sorted(rows)
     assert cn == len(olds) == 91

@@ -45,6 +45,11 @@ def test_distributed_sweep_quality_and_structure(spark):
     ncomm = res.membership.select("community").distinct().count()
     assert ncomm == gold["communities"]
     assert abs(res.modularity - gold["modularity"]) < 0.01 * abs(gold["modularity"]) + 1e-9
+    # the run ends in the driver kernel, whose Q on the aggregated graph is
+    # returned: it must be the input graph's Q of the composed labels
+    assert any(m.get("strategy") == "driver-kernel" for m in res.metrics)
+    assert math.isclose(res.modularity, modularity_df(edges, res.membership, res.M),
+                        abs_tol=1e-6)
 
 
 def test_distributed_determinism(spark):
@@ -63,9 +68,12 @@ def test_louvain_flag(spark):
     assert math.isclose(res.modularity, _gold("karate", "louvain")["modularity"], abs_tol=1e-6)
 
 
-def test_checkpoint_resume(spark, tmp_path):
+@pytest.mark.parametrize("counts", ["metadata", "counted"])
+def test_checkpoint_resume(spark, tmp_path, counts):
     """Kill-and-resume (FIXTURES.md §5): a run resumed from the pass-1
-    checkpoint produces identical final labels to an uninterrupted run."""
+    checkpoint produces identical final labels to an uninterrupted run —
+    also from a pass whose _metrics.json lacks the written edge and vertex
+    counts (an older checkpoint), which the resume then counts."""
     from leiden_communities_openmp_spark.plans.checkpoint import CheckpointManager
 
     edges, _ = read_mtx_spark(spark, os.path.join(MTX_DIR, "planted_sbm_s.mtx"))
@@ -79,6 +87,11 @@ def test_checkpoint_resume(spark, tmp_path):
     shutil.copytree(src, dst)
     for d in sorted(os.listdir(dst))[1:]:
         shutil.rmtree(dst / d)
+    if counts == "counted":
+        meta_path = dst / "pass_00001" / "_metrics.json"
+        meta = json.loads(meta_path.read_text())
+        del meta["edge_rows"], meta["vertices"]
+        meta_path.write_text(json.dumps(meta))
     resumed = leiden_scale(spark, edges, LeidenOptions(), driver_threshold=0, num_partitions=4,
                            checkpointer=CheckpointManager(str(dst)))
     ra = {r["id"]: r["community"] for r in full.membership.collect()}
