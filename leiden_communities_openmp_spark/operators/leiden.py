@@ -14,24 +14,30 @@ the *pass-level contract* of the reference pipeline
 - dendrogram flattening ucom[u] = vcom[ucom[u]] (inc/leiden.hxx:1278-1279)
 - max 20 move rounds / pass, max 10 passes (inc/leiden.hxx:62)
 
-Three move-phase execution strategies, chosen per pass:
+ONE pass loop (``leiden_scale``) owns that contract — resume, driver-finish
+routing, the stop rule, the tolerance schedule, the checkpoint handoff, the
+final modularity and cleanup — and runs each distributed pass through one
+of two move backends, each supplying only its move + refine, renumber and
+aggregate steps:
 
-1. ``sweep`` (default while the graph is big): partitioned Gauss-Seidel —
-   edges range-partitioned into contiguous degree-balanced vertex-id blocks
-   (CSR-style adjacency partitions; web link graphs and every renumbered
-   super-graph have id locality, so most neighborhoods are partition-local),
-   one ``mapInPandas`` job per coarse round sweeping every partition against
-   a broadcast state snapshot (operators/sweep.py, C-accelerated hot loop in
-   operators/_ckernel.py). The Spark analogue of the reference's per-thread
-   async loop (inc/leiden.hxx:646-668).
-2. ``rounds``: pure-DataFrame bulk-synchronous rounds (A4 join-agg + argmax
-   via max_by). Unbounded state (no broadcast), one shuffle chain per round;
-   the fallback beyond ~10^9 vertices, and the reference plan for the
-   correctness-gated operator queries.
-3. driver fast path: once the aggregated graph fits trivially in the driver
-   (late passes — super-graphs shrink geometrically), finish with the
-   deterministic kernel. Mirrors the reference's own switch from DiGraph to
-   packed CSR after pass 1 (inc/leiden.hxx:1249-1250).
+1. ``sweep`` (``_SweepPass``, default while the graph is big): partitioned
+   Gauss-Seidel — edges range-partitioned into contiguous degree-balanced
+   vertex-id blocks (CSR-style adjacency partitions; web link graphs and
+   every renumbered super-graph have id locality, so most neighborhoods are
+   partition-local), one ``mapInPandas`` job per coarse round sweeping
+   every partition against a broadcast state snapshot (operators/sweep.py,
+   C-accelerated hot loop in operators/_ckernel.py). The Spark analogue of
+   the reference's per-thread async loop (inc/leiden.hxx:646-668).
+2. ``rounds`` (``_RoundsPass``): pure-DataFrame bulk-synchronous rounds (A4
+   join-agg + argmax via max_by). Unbounded state (no broadcast), one
+   shuffle chain per round; the fallback beyond ~10^9 vertices, and the
+   reference plan for the correctness-gated operator queries.
+
+Either backend hands over to the driver finish once the aggregated graph
+fits trivially in the driver (late passes — super-graphs shrink
+geometrically): the deterministic kernel finishes it. Mirrors the
+reference's own switch from DiGraph to packed CSR after pass 1
+(inc/leiden.hxx:1249-1250).
 
 Physical design per sweep round: the only big relation (edges) is shuffled
 ONCE per pass (range repartition, then reused persisted, int32/float32
@@ -45,6 +51,7 @@ skew by AQE (the groupBy(cs,cd) shuffle).
 
 from __future__ import annotations
 
+import logging
 import time
 from dataclasses import dataclass, field
 
@@ -59,6 +66,8 @@ from .materialize import materialize
 from .sweep import DriverState, sweep_partition
 
 _MOVES_SCHEMA = "id long, community_new long, gain double, blocked int"
+
+log = logging.getLogger(__name__)
 
 _PART_LABELS: dict[int, list[int]] = {}
 
@@ -141,6 +150,33 @@ def _range_partition_edges(spark: SparkSession, g: DataFrame, vid, weight, p: in
 
 @dataclass
 class LeidenRunResult:
+    """One ``leiden_scale`` run. ``metrics`` is a list of flat records, in
+    run order (a resumed run's list starts with the committed run's records
+    up to its resume pass); tests/test_scale_mode.py pins the schema.
+
+    Phase records carry ``phase``:
+
+    - ``setup``: ``seconds`` (edge projection, M and the symmetry check);
+    - ``strategy`` (``strategy="auto"`` only): ``chosen``, ``v_estimate``;
+    - ``final_modularity``: ``seconds`` (0-ish when the driver kernel's Q is
+      returned).
+
+    Pass records carry ``pass`` (1-based, after the pass) and ``strategy``:
+
+    - every distributed pass (``sweep`` or ``rounds``): ``move_iterations``,
+      ``vertices``, ``communities``, ``edges`` (edge rows in), ``tolerance``,
+      ``move_seconds``, ``refine_seconds``, ``pass_seconds`` (start of pass
+      through refine), ``renumber_seconds``, ``aggregate_seconds`` (passes
+      that continue only), and ``rounds``: one
+      ``{seconds, movers, blocked, el, fed}`` per move round (``fed``: the
+      round read only the frontier's edges);
+    - ``sweep`` adds ``vt_seconds``, ``partition_seconds``,
+      ``refine_job_seconds``, ``refine_apply_seconds``, ``driver_hop``
+      (``{bcast, job_collect, rows_out, apply}``) and, on passes that
+      continue, ``aggregate_salted`` and ``aggregate_multigraph``;
+    - ``rounds`` adds ``refine_rounds``;
+    - ``driver-kernel`` (the finish): ``vertices``, ``edges``,
+      ``kernel_passes``, ``pass_seconds``."""
     membership: DataFrame                  # (id: long, community: long)
     modularity: float
     passes: int
@@ -210,11 +246,6 @@ _BROADCAST_RELABEL_LIMIT = 8_000_000
 # BENCH/profile_4m_unfed_8c.json). Callers pin behavior with an explicit
 # frontier_threshold (0.0 = never feed).
 _FRONTIER_FEED_EDGE_GATE = 50_000_000
-# A/B switch: build fed rounds from the task-emitted affected-src set
-# (True, steady state — zero rediscovery scans) vs always the legacy JVM
-# frontier scan (False). Same shipped row set either way; exists so tests
-# and profiling can pin one path.
-_FEED_FROM_TASKS = True
 
 
 def _broadcast_row_limit(spark: SparkSession, bytes_per_row: int = 48) -> int:
@@ -435,22 +466,479 @@ def _checkpoint_handoff(spark: SparkSession, checkpointer, p: int, ucom: DataFra
     return (ucom, g) + _committed_counts(checkpointer, p, g)
 
 
-def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOptions,
-                 R: float, refine: bool, local_iters: int, driver_threshold: int,
-                 driver_vertex_threshold: int, num_partitions: int,
-                 metrics: list, verbose: bool, checkpointer=None,
-                 start=(0, None, None, None, 0, None, None),
-                 aff_seed_fraction: float = 0.02):
-    """Pure-DataFrame pass loop (``rounds`` strategy) — the ≥10⁹-vertex
-    fallback with NO driver-side per-vertex state: membership, vertex
-    weights, and community weights all live as DataFrames; the driver holds
-    only scalars (M, E, counts) and one count-per-shuffle-partition map for
-    the renumber scan. Same pass contract as the sweep path (tolerance
-    schedule, aggregation early-exit, order-preserving renumber, dendrogram
-    flattening); the move phase is bulk-synchronous rounds (_move_round)
-    with alternating direction to break swap cycles — the same
-    parallel-Leiden family as the reference's racy OpenMP loop
-    (inc/leiden.hxx:646-668), traded per-round latency for unbounded state.
+class _PassStep:
+    """One move backend's part of a distributed pass; the pass loop in
+    ``leiden_scale`` owns the rest of the pass contract. Per pass the loop
+    calls ``move`` (vertex weights, local-move rounds, refinement → move
+    iterations, vertices, metrics fields), ``renumber`` (dense order-
+    preserving labels composed onto the dendrogram → its plan and the
+    community count) and, on a pass that continues, ``aggregate`` (→ the
+    next pass's graph plan, its row count when handed over lazily, metrics
+    fields), then ``end_pass`` after the aggregate is materialized or
+    committed. ``close`` runs on every exit path."""
+
+    def __init__(self, spark: SparkSession, M: float, o: LeidenOptions, refine: bool,
+                 num_partitions: int, local_iters: int, aff_seed_fraction: float,
+                 frontier_threshold: float | None):
+        self.spark, self.M, self.o, self.refine = spark, M, o, refine
+        self.num_partitions, self.local_iters = num_partitions, local_iters
+        self.aff_seed_fraction = aff_seed_fraction
+        self.frontier_threshold = frontier_threshold
+
+    def end_pass(self):
+        pass
+
+    def close(self):
+        pass
+
+
+class _SweepPass(_PassStep):
+    """``sweep`` backend: broadcast-state partitioned Gauss-Seidel. The
+    driver holds the per-vertex state (vid, vtot, comm, ctot) as numpy
+    arrays; pass ≥ 2 vertex weights are the previous pass's community
+    weights, carried across the pass boundary instead of recomputed."""
+
+    name = "sweep"
+
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.carried: tuple | None = None          # (vid, vtot) for passes ≥ 2
+        self.part_edges: DataFrame | None = None
+        self.pending_unpersist: DataFrame | None = None  # prev pass's part_edges feeding a lazy g
+        self.lazy = False                          # was the last handoff lazy?
+        # per-pass relabel broadcasts: a LAZY multigraph g references its
+        # pass's broadcast from inside a pickled mapInPandas function, so the
+        # Python Broadcast object must stay referenced until that plan has
+        # executed — dropping it would let the ContextCleaner destroy it
+        # under the deferred plan. Drained once the next pass's shuffle has
+        # consumed the plan; destroyed in close().
+        self.rel_keepalive: list = []
+
+    def move(self, g: DataFrame, n_edges: int, E: float, p: int):
+        # plain locals: the task lambda below must not capture self, which
+        # holds the SparkSession
+        spark, M, R = self.spark, self.M, self.o.resolution
+        sc, num_partitions = spark.sparkContext, self.num_partitions
+        local_iters = self.local_iters
+        self.n_edges = n_edges
+        t_ph = time.time()
+        if self.carried is None:
+            # A2 from the edge table (first pass / resume). Arrow
+            # collect + numpy argsort: skips the pandas block
+            # consolidation and sort_values copy of the |V|-row collect
+            # (src is unique, so a stable argsort is exactly
+            # sort_values' order — values bit-identical)
+            vt = (
+                g.groupBy("src")
+                .agg(F.sum("w").alias("vtot"), F.count(F.lit(1)).alias("deg"))
+                .toArrow()
+            )
+            src_col = vt.column("src").to_numpy(zero_copy_only=False)
+            order = np.argsort(src_col, kind="stable")
+            vid_arr = src_col[order].astype(np.int64, copy=False)
+            vtot_arr = vt.column("vtot").to_numpy(zero_copy_only=False)[order]
+            bal = vt.column("deg").to_numpy(zero_copy_only=False)[order].astype(np.float64)
+        else:
+            # passes ≥ 2: the super-vertex weight IS the previous pass's
+            # community weight (Σ member vtot, self-loops included) — the
+            # driver already holds it, no Spark job needed
+            vid_arr, vtot_arr = self.carried
+            bal = vtot_arr
+        t_vt = time.time() - t_ph
+        state = self.state = DriverState(vid_arr, vtot_arr)
+        t_ph = time.time()
+        part_edges = self.part_edges = _range_partition_edges(
+            spark, g, state.vid, bal, num_partitions
+        ).persist()
+        part_edges.count()                     # materialize the pass shuffle
+        if self.pending_unpersist is not None:
+            # the lazy multigraph relabel has now been folded into this
+            # shuffle's map stage; its input (last pass's partitions) can go
+            self.pending_unpersist.unpersist()
+            self.pending_unpersist = None
+        # previous passes' relabel broadcasts are fully consumed now
+        # (lazy g executed by this shuffle; ucom composes materialize
+        # within their own pass) — release the EXECUTOR copies only.
+        # destroy() here would be a latent crash: the cached part_edges
+        # lineage (kept for lost-block recompute) still references the
+        # lazy relabel's mapInPandas closure, and any later job that
+        # re-serializes that lineage (e.g. a fed round's frontier
+        # semi-join) dies with INTERNAL_ERROR_BROADCAST. unpersist()
+        # keeps the driver copy re-fetchable; destroy happens once at
+        # run teardown (close()).
+        for _bc in self.rel_keepalive:
+            try:
+                _bc.unpersist()
+            except Exception:
+                pass
+        t_part = time.time() - t_ph
+        gn = len(state.vid)
+
+        # vid/vtot are pass-constant: broadcast them ONCE per pass; each
+        # round ships only the mutable half (comm, ctot, seed/bound) — half
+        # the per-round driver serialization and torrent traffic, and the
+        # static blocks stay warm in every reused Python worker
+        # per-pass frontier-feed threshold: coarse passes shrink below the
+        # gate and drop back to the full feed of their (small) cached table
+        fthr = (self.frontier_threshold if self.frontier_threshold is not None
+                else (self.aff_seed_fraction if n_edges >= _FRONTIER_FEED_EDGE_GATE
+                      else 0.0))
+        # task-side affected-neighbor emission cap (= the feed gate): a
+        # round whose global mover count clears it hands the NEXT round's
+        # frontier src set to the driver for free — see
+        # sweep_partition._emit and the feed construction below
+        fcap = int(fthr * gn)
+        bc_static = sc.broadcast({"vid": state.vid, "vtot": state.vtot,
+                                  "emit_affected": fcap})
+        # per-pass driver-hop accounting: the sweep's only non-executor
+        # segments are (a) the per-round dyn-state broadcast build, (b) the
+        # blocking job+mover-collect action, (c) the numpy state apply —
+        # recorded so scaling runs can attribute core-independent time
+        # (tools/amdahl.py) to a measured segment instead of a guess
+        hop = {"bcast": 0.0, "job_collect": 0.0, "rows_out": 0, "apply": 0.0}
+
+        def run_sweep(dyn_dict, refine_flag, E_cur, direction=0, feed=None):
+            # the in-task sweep sees ~1/P of the graph, so its share of the
+            # global gain budget is E/P — a task that compares its local
+            # gain sum to the GLOBAL E quits ~P× too early and pushes the
+            # convergence work into many more (expensive) coarse rounds
+            E_task = E_cur / max(num_partitions, 1)
+            t_b = time.time()
+            bc = sc.broadcast(dyn_dict)
+            hop["bcast"] += time.time() - t_b
+            try:
+                t_j = time.time()
+                out = (feed if feed is not None else part_edges).mapInPandas(
+                    lambda it: sweep_partition(it, {**bc_static.value, **bc.value},
+                                               M, R, E_task,
+                                               1 if refine_flag else local_iters,
+                                               refine_flag, direction),
+                    schema=_MOVES_SCHEMA,
+                ).toPandas()
+                hop["job_collect"] += time.time() - t_j
+                hop["rows_out"] += int(len(out))
+            finally:
+                bc.destroy()
+            return out
+
+        def feed_from_srcs(src_ids):
+            """Frontier cut for aff-seeded rounds: ship through Arrow only
+            the full adjacency of vertices with a moved neighbor (plus the
+            seeds' own rows — seeds self-activate in-task). The src set
+            arrived with the previous rounds' mover collect (task-emitted
+            blocked==2 rows — neighbors of movers, already distinct per
+            task), so the feed is ONE map-side broadcast semi-join on a
+            driver-local list: the range-bucket partitioning and (src,dst)
+            order are preserved, no extra scan of the edge table, no
+            distinct shuffle. At 100 TB this is what makes late rounds
+            ~free."""
+            import pandas as pd
+            adf = spark.createDataFrame(
+                pd.DataFrame({"src": np.asarray(src_ids, dtype="int64")}))
+            return part_edges.join(F.broadcast(adf), "src", "left_semi")
+
+        move_iters = 0
+        t_move0 = time.time()
+        el_prev = float("inf")
+        round_log: list[dict] = []
+        changed_pos = None            # aff seed (union of last 2 rounds' movers)
+        prev_pos = None               # movers of the immediately previous round
+        aff_ids: list = []            # last 2 rounds' task-emitted affected srcs
+        prev_sigs: list[tuple] = []   # limit-cycle detection (period ≤ 2)
+        for rnd in range(self.o.max_iterations):
+            # alternate move direction across coarse rounds to break
+            # cross-partition swap cycles (see sweep_partition docstring);
+            # a single partition has no stale state and sweeps freely
+            direction = 0 if num_partitions <= 1 else (-1 if rnd % 2 == 0 else 1)
+            t_rnd = time.time()
+            snap = state.snapshot(static=False)
+            feed = None
+            if changed_pos is not None and len(changed_pos):
+                snap["changed_pos"] = changed_pos
+                # frontier cut only below the threshold fraction (default:
+                # every seeded round once the pass's edge table clears the
+                # auto gate — see _FRONTIER_FEED_EDGE_GATE). The feed src
+                # set mirrors the seed union EXACTLY: neighbors(seed)∪seed =
+                # the union of the seeded rounds' affected sets, and below
+                # the threshold each of those rounds had at most fcap
+                # movers, so every task emitted and no set is None
+                if len(changed_pos) < fthr * gn:
+                    feed = feed_from_srcs(np.unique(np.concatenate(aff_ids)))
+            out = run_sweep(snap, False, E, direction, feed=feed)
+            move_iters += 1
+            # blocked==2 rows are task-emitted affected neighbors (feed
+            # bookkeeping, not moves): split them off before anything
+            # reads mover counts, seeds, or stop signatures
+            if len(out):
+                nbr_ids = out.loc[out["blocked"] == 2, "id"].to_numpy(np.int64)
+                out = out[out["blocked"] != 2]
+            else:
+                nbr_ids = np.empty(0, dtype=np.int64)
+            # the union is complete only when the GLOBAL mover count is
+            # within the task emission cap (then every task emitted)
+            aff_now_ids = (
+                np.union1d(np.unique(nbr_ids), out["id"].to_numpy(np.int64))
+                if 0 < len(out) <= fcap
+                else (np.empty(0, dtype=np.int64) if len(out) == 0 else None))
+            # split movers from direction-blocked pending moves (blocked=1
+            # rows carry an unchanged label; they are applied nowhere but
+            # stay in the aff seed so the flipped direction releases them)
+            mv = out[out["blocked"] == 0] if len(out) else out
+            n_blocked = int(len(out) - len(mv))
+            if len(mv):
+                t_ap = time.time()
+                state.apply_moves(mv["id"].to_numpy(np.int64),
+                                  mv["community_new"].to_numpy(np.int64))
+                hop["apply"] += time.time() - t_ap
+            if len(out):
+                # aff-seed the next round only when the frontier is small:
+                # a big mover set needs a full re-equilibration round (frontier
+                # waves otherwise keep el hovering at the tolerance), while a
+                # small one makes the next round O(frontier) — the 100 TB tail.
+                # Seed with the UNION of the last two rounds' movers AND
+                # blocked vertices: rounds alternate direction, so a vertex
+                # activated by a round-r move must stay scannable through r+1
+                # AND r+2 (one round of each direction), and a vertex whose
+                # only positive move was direction-blocked (blocked=1 row)
+                # must be rescanned after the flip (unlike the reference's
+                # direction-free vaff pruning, inc/leiden.hxx:656,661-662)
+                pos = state.pos(out["id"].to_numpy(np.int64))
+                seed = pos if prev_pos is None else np.union1d(pos, prev_pos)
+                changed_pos = seed if len(seed) < self.aff_seed_fraction * gn else None
+                prev_pos = pos
+            else:
+                changed_pos = np.empty(0, dtype=np.int64)
+                prev_pos = changed_pos
+            aff_ids = [aff_now_ids] + aff_ids[:1]
+            el = float(mv["gain"].sum()) if len(mv) else 0.0
+            round_log.append({"seconds": round(time.time() - t_rnd, 2),
+                              "movers": int(len(mv)), "blocked": n_blocked,
+                              "el": round(el, 6), "fed": feed is not None})
+            # a direction-constrained round sees only half the move space, so
+            # convergence needs two consecutive below-tolerance rounds; a
+            # tiny-churn stop bounds synchronous label noise that never
+            # crosses E (the async reference has no such noise floor); a
+            # repeated (movers, gain, id-sum) signature means a period-≤2
+            # limit cycle that will never descend below E — stop
+            sig = (len(mv), round(el, 10),
+                   int(mv["id"].sum()) if len(mv) else 0)
+            cycle = sig in prev_sigs
+            prev_sigs = (prev_sigs + [sig])[-2:]
+            tiny = len(mv) <= max(8, gn // 2000)
+            # plateau: alternating-direction sweeps can descend very slowly
+            # near a swap-rich fixed point (el improves <30% per 3-round
+            # window) — aggregation + the next pass converges the residue
+            # far cheaper than more same-level rounds, so hand off instead
+            # of grinding to the iteration cap (deterministic rule)
+            els = [r["el"] for r in round_log]
+            plateau = len(els) >= 6 and min(els[-3:]) > 0.7 * min(els[-6:-3])
+            # pending blocked moves veto the tiny/tolerance stops (the next
+            # round's flipped direction releases them); cycle and plateau
+            # remain hard stops (bounded work)
+            if len(out) == 0 or cycle or plateau or (
+                    n_blocked == 0 and (tiny or (
+                        el <= E and (direction == 0 or el_prev <= E)))):
+                break
+            el_prev = el
+        t_move = time.time() - t_move0
+
+        t_ref0 = time.time()
+        t_ref_job = t_ref_apply = 0.0
+        if self.refine:
+            bound = state.comm.copy()
+            state.comm = state.vid.copy()          # singleton re-init
+            state.ctot = state.vtot.copy()
+            state.comm_pos = np.arange(gn, dtype=np.int64)
+            out = run_sweep(state.snapshot(bound, static=False), True, E)
+            t_ref_job = time.time() - t_ref0
+            if len(out):
+                # Ascending-id sequential acceptance (the source-still-
+                # singleton recheck, inc/leiden.hxx:536-548) — vectorized.
+                # After singleton re-init every mover's source community is
+                # itself, so the sequential semantics reduce to: a move u→c
+                # is rejected iff some ACCEPTED mover w < u targeted
+                # community u (ctot[u] then exceeds vtot[u] when u is
+                # processed). Dependencies only point from smaller to larger
+                # ids, so the unique fixpoint is reached by iterating the
+                # rejection map — each numpy pass settles one more stratum
+                # of the (short in practice) dependency chains; O(movers)
+                # work per pass instead of a per-mover Python loop.
+                out = out.sort_values("id")
+                uid = out["id"].to_numpy(np.int64)          # ascending
+                tgt = out["community_new"].to_numpy(np.int64)
+                ups = state.pos(uid)
+                tps = state.pos(tgt)
+                uvt = state.vtot[ups]
+                INF = np.iinfo(np.int64).max
+                order = np.argsort(tgt, kind="stable")
+                tgt_s = tgt[order]
+                uid_s = uid[order]
+                seg = np.flatnonzero(np.concatenate([[True], tgt_s[1:] != tgt_s[:-1]]))
+                seg_tgt = tgt_s[seg]                        # distinct targets
+                u_seg = np.minimum(np.searchsorted(seg_tgt, uid), len(seg) - 1)
+                has_in = seg_tgt[u_seg] == uid              # u is someone's target
+                acc = np.ones(len(uid), dtype=bool)
+                for _ in range(len(uid) + 1):
+                    # per-target min id among currently-accepted in-movers
+                    # (zero-weight movers leave ctot at vtot — not a
+                    # rejection), then: u rejected iff that min < u
+                    cand_id = np.where(acc[order] & (uvt[order] > 0), uid_s, INF)
+                    seg_min = np.minimum.reduceat(cand_id, seg)
+                    min_in = np.where(has_in, seg_min[u_seg], INF)
+                    new_acc = ~(min_in < uid)
+                    if np.array_equal(new_acc, acc):
+                        break
+                    acc = new_acc
+                a = np.flatnonzero(acc)
+                state.comm[ups[a]] = tgt[a]
+                np.add.at(state.ctot, ups[a], -uvt[a])
+                np.add.at(state.ctot, tps[a], uvt[a])
+            t_ref_apply = time.time() - t_ref0 - t_ref_job
+        t_ref = time.time() - t_ref0
+        bc_static.destroy()
+        return move_iters, gn, {
+            "move_seconds": round(t_move, 3),
+            "refine_seconds": round(t_ref, 3),
+            "refine_job_seconds": round(t_ref_job, 3),
+            "refine_apply_seconds": round(t_ref_apply, 3),
+            "vt_seconds": round(t_vt, 3),
+            "partition_seconds": round(t_part, 3),
+            "driver_hop": {k: (round(v, 3) if isinstance(v, float) else v)
+                           for k, v in hop.items()},
+            "rounds": round_log}
+
+    def renumber(self, ucom: DataFrame | None):
+        # dense, order-preserving (R2)
+        state, gn = self.state, len(self.state.vid)
+        uniq = np.unique(state.comm)
+        dense = np.searchsorted(uniq, state.comm)
+        self.cn = int(uniq.size)
+        # next pass's dense vertex universe + carried vertex weights
+        self.carried = (np.arange(uniq.size, dtype=np.int64),
+                        state.ctot[state.pos(uniq)].copy())
+        # ONE torrent broadcast of the (vid → dense community) arrays
+        # replaces the driver-serial createDataFrame(|V| rows) plus the
+        # THREE broadcast-exchange builds it used to feed (two aggregate
+        # relabel joins + the dendrogram compose join) — each an O(|V|)
+        # driver collect + hash-relation build per pass, together the
+        # largest block of the measured Amdahl serial intercept. Size is
+        # 2×8B×|V|, the same order as the sweep's per-round state
+        # broadcast, so it holds wherever the sweep strategy itself does
+        # (≤ the documented 3×10⁸-vertex auto-switch to rounds).
+        bc_rel = self.spark.sparkContext.broadcast(
+            {"vid": state.vid.astype(np.int64), "dense": dense.astype(np.int64)})
+        self.rel_keepalive.append(bc_rel)
+        # membership relation built in PARALLEL from the broadcast
+        # arrays (position → (vid[pos], dense[pos])) instead of a
+        # driver-serial createDataFrame of |V| rows; consumed by the
+        # pass-1 ucom and the aggregate relabel joins
+        self.memb_df = (
+            self.spark.range(0, gn, numPartitions=self.num_partitions)
+            .mapInPandas(_memb_from_positions_fn(bc_rel), "id long, community long"))
+        if ucom is None:
+            return self.memb_df, self.cn
+        return ucom.mapInPandas(_compose_np_fn(bc_rel), "id long, community long"), self.cn
+
+    def aggregate(self, lazy_ok: bool):
+        # A9: relabel both endpoints, sum — self-loops kept. The relabel
+        # stays a JVM broadcast-hash join: routing the O(E) edge relation
+        # through an Arrow/Python map instead was measured 2.5× slower on
+        # the 83M-row pass-2 multigraph (the per-row JVM join beats the
+        # Python hop by far more than the exchange-build saves) — the
+        # serial win is taken on the BUILD side instead, with memb_df
+        # produced in parallel from the broadcast arrays.
+        state, gn = self.state, len(self.state.vid)
+        ms = _maybe_broadcast(
+            self.memb_df.select(F.col("id").alias("src"), F.col("community").alias("cs")), gn)
+        md = _maybe_broadcast(
+            self.memb_df.select(F.col("id").alias("dst"), F.col("community").alias("cd")), gn)
+        joined = self.part_edges.join(ms, "src").join(md, "dst")
+        # giant-community skew (O7, SURVEY §7 hard-part 6): when the
+        # heaviest community holds a big share of total weight, the
+        # (cs, cd) grouping key concentrates on one reducer — measured
+        # from the driver's ctot (free), remedied with a two-stage salted
+        # partial aggregation instead of trusting AQE alone
+        heavy = bool(state.ctot.max() / (2.0 * self.M) > 0.2) if len(state.ctot) else False
+        # poor-collapse passes (CN within ~10× of GN — e.g. a noisy pass 1
+        # where 21.6M edges would "aggregate" to 20M rows) skip the
+        # (cs,cd) groupBy entirely: every downstream consumer SUMS edge
+        # weights (kernel tallies, vertex/community weights, modularity,
+        # the next aggregation), so a relabeled multigraph is semantically
+        # identical, and with a broadcast relabel map the whole aggregation
+        # becomes map-side — no shuffle of the big relation at all
+        # (measured: 37.5s grouped → 13.0s relabel-only at 2 cores on the
+        # 21.6M-edge planted graph). Good-collapse passes keep the groupBy
+        # (18.8M → 52k rows is worth a shuffle); skewed passes keep the
+        # salted two-stage variant.
+        multigraph = (not heavy and gn <= _BROADCAST_VERTEX_LIMIT
+                      and self.cn >= 0.1 * gn)
+        if heavy:
+            g = (
+                joined.withColumn("_salt", F.pmod(F.xxhash64("src"), F.lit(16)))
+                .groupBy("cs", "cd", "_salt").agg(F.sum("w").alias("w"))
+                .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
+                .agg(F.sum("w").alias("w"))
+            )
+        elif multigraph:
+            g = joined.select(F.col("cs").alias("src"), F.col("cd").alias("dst"),
+                              F.col("w").cast("double").alias("w"))
+        else:
+            g = (
+                joined.groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
+                .agg(F.sum("w").alias("w"))
+            )
+        # LAZY handoff (no checkpoint write to run the plan): the relabel is
+        # a map-side broadcast join with the SAME row count as its input —
+        # every dst has a membership row, since the input was checked
+        # symmetric at setup and later passes' vid is the dense 0..C-1
+        # universe — and its only consumer is the next pass's
+        # range-partition shuffle, so materializing it would cost a full
+        # O(E) block-manager write + re-read purely to truncate lineage. The
+        # join fuses into the next shuffle's map stage instead (one O(E)
+        # scan, zero intermediate writes), the known row count rides along
+        # (no count job), and the persisted input partitions stay alive
+        # until that shuffle has consumed them. Consecutive lazy handoffs
+        # are capped at 1: a chain of unmaterialized broadcast joins means a
+        # lost/evicted cache block on a real cluster recomputes through
+        # every unpersisted previous pass (the 100 TB-cluster guard). In
+        # practice only the noisy pass 1 takes this path.
+        self.lazy = lazy_ok and multigraph and not self.lazy
+        if self.lazy:
+            self.pending_unpersist = self.part_edges
+        return g, (int(self.n_edges) if self.lazy else None), {
+            "aggregate_salted": heavy, "aggregate_multigraph": multigraph}
+
+    def end_pass(self):
+        if not self.lazy:
+            self.part_edges.unpersist()
+
+    def close(self):
+        # unpersist is idempotent: exit paths that already released their
+        # blocks are no-ops, and an exception between a lazy handoff and
+        # the next pass no longer leaks part_edges for the session lifetime
+        for df in (self.pending_unpersist, self.part_edges):
+            if df is not None:
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass
+        for bc in self.rel_keepalive:
+            try:
+                bc.destroy()
+            except Exception:
+                pass
+        self.rel_keepalive.clear()
+
+
+class _RoundsPass(_PassStep):
+    """``rounds`` backend — the ≥10⁹-vertex fallback with NO driver-side
+    per-vertex state: membership, vertex weights, and community weights all
+    live as DataFrames; the driver holds only scalars (M, E, counts) and one
+    count-per-shuffle-partition map for the renumber scan. The move phase
+    is bulk-synchronous rounds (_move_round) with alternating direction to
+    break swap cycles — the same parallel-Leiden family as the reference's
+    racy OpenMP loop (inc/leiden.hxx:646-668), traded per-round latency for
+    unbounded state.
 
     Refinement (one constrained round, inc/leiden.hxx:1259-1268) resolves
     synchronous conflicts with a connectivity-preserving acceptance rule:
@@ -458,34 +946,17 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
     candidate move of its own — every refined community is then a star
     around its anchor (each accepted mover shares an edge with c inside the
     bound), so the well-connectedness guarantee survives without the
-    reference's sequential rollback (inc/leiden.hxx:536-548).
+    reference's sequential rollback (inc/leiden.hxx:536-548)."""
 
-    ``start`` is (pass, ucom, g, E, total_iters, n_edges, n_vertices) — the
-    counts of ``g`` when known (None: count). Returns (ucom, passes,
-    total_iters, q), where q is the driver kernel's modularity when the run
-    ends there, else None.
-    """
-    p, ucom, g, E, total_iters, n_edges, n_vertices = start
-    g = edges0 if g is None else g
-    E = o.tolerance if E is None else E
-    q = None
-    while True:
-        t0 = time.time()
-        if n_edges is None:
-            n_edges = g.count()
-        if n_edges <= driver_threshold or (
-                n_vertices is not None and n_vertices <= driver_vertex_threshold):
-            memb_df, n_vid, sub = _driver_finish(spark, g, R, E, o, refine, p)
-            ucom = materialize(memb_df if ucom is None else _compose(ucom, memb_df, n_vid))
-            q = sub.modularity
-            total_iters += sub.iterations
-            p += sub.passes
-            metrics.append({"pass": p, "strategy": "driver-kernel",
-                            "vertices": n_vid, "edges": int(n_edges),
-                            "kernel_passes": sub.passes,
-                            "pass_seconds": round(time.time() - t0, 3)})
-            break
+    name = "rounds"
 
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.cached: list[DataFrame] = []   # persisted move outputs pending release
+
+    def move(self, g: DataFrame, n_edges: int, E: float, p: int):
+        spark, M, R = self.spark, self.M, self.o.resolution
+        self.g = g
         vt = materialize(vertex_weights(g))               # A2
         gn = vt.count()
         big = gn > _BROADCAST_VERTEX_LIMIT
@@ -514,10 +985,9 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
         seed_nbrs = None              # affected-set pruning (L6) across rounds
         recent: list[DataFrame] = []  # last 4 rounds' movers+blocked (one
                                       # full color × direction cycle)
-        cached: list[DataFrame] = []  # persisted move outputs pending release
         recent_els: list[float] = []
         recent_nm: list[int] = []
-        for rnd in range(local_iters):
+        for rnd in range(self.local_iters):
             t_rnd = time.time()
             direction = -1 if (rnd // 2) % 2 == 0 else 1
             # one action materializes the move job AND collects the
@@ -527,19 +997,17 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                                 direction=direction,
                                 broadcast_ctot=not big,
                                 src_pred=color_preds[rnd % 2]).persist()
+            self.cached.append(moves)
             row = moves.agg(
                 F.count("gain").alias("n"),
                 F.count("*").alias("n_all"),
                 F.coalesce(F.sum(F.coalesce("gain", "gain_blocked")),
                            F.lit(0.0)).alias("el")).collect()[0]
-            t_mv = time.time() - t_rnd
             move_iters += 1
             nm, n_all, el = int(row["n"]), int(row["n_all"]), float(row["el"])
-            cached.append(moves)
-            if verbose:
-                print(f"[rounds] pass={p+1} rnd={rnd} dir={direction} movers={nm} "
-                      f"blocked={n_all - nm} el={el:.5f} (move_job={t_mv:.1f}s)",
-                      flush=True)
+            log.debug("rounds pass=%d rnd=%d dir=%d movers=%d blocked=%d el=%.5f "
+                      "(move_job=%.1fs)", p + 1, rnd, direction, nm, n_all - nm, el,
+                      time.time() - t_rnd)
             recent = (recent + [moves.select("id")])[-4:]
             if nm:
                 # stats-reset leaves don't auto-broadcast — hint explicitly
@@ -566,7 +1034,8 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
             # stays scannable through both color phases and both direction
             # signs (4 rounds), so no positive move is ever dropped
             recent_nm = (recent_nm + [n_all])[-4:]
-            if max(recent_nm) < aff_seed_fraction * gn and len(recent) == 4:
+            fed = seed_nbrs is not None
+            if max(recent_nm) < self.aff_seed_fraction * gn and len(recent) == 4:
                 seed = recent[0]
                 for r_ in recent[1:]:
                     seed = seed.unionByName(r_)
@@ -575,8 +1044,8 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                 seed_nbrs = materialize(seed.unionByName(nb).distinct())
             else:
                 seed_nbrs = None
-            while len(cached) > 4:    # keep the seed window computable
-                cached.pop(0).unpersist()
+            while len(self.cached) > 4:   # keep the seed window computable
+                self.cached.pop(0).unpersist()
             # a (color, direction) round sees a quarter of the move space:
             # converged only when a FULL cycle (4 rounds — both colors,
             # both directions) stays under tolerance; el counts blocked
@@ -584,15 +1053,14 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
             recent_els.append(el)
             rounds_log.append({"seconds": round(time.time() - t_rnd, 2),
                                "movers": nm, "blocked": n_all - nm,
-                               "el": round(el, 6)})
+                               "el": round(el, 6), "fed": fed})
             if rnd >= 3 and max(recent_els[-4:]) <= E:
                 break
-        for c_ in cached:
-            c_.unpersist()
+        self.close()
 
         t_ref0 = time.time()
         refine_rounds_done = 0
-        if refine:
+        if self.refine:
             # Gain-based refinement (inc/leiden.hxx:1259-1268) as bounded
             # bulk-synchronous rounds: re-init every vertex as a singleton,
             # then a few constrained move rounds — targets must share the
@@ -621,6 +1089,7 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                 mv = _move_round(g, memb_r, vt, ctot_r, M, R, aff=sing,
                                  bound=bound_df, refine=True, direction=rdir,
                                  broadcast_ctot=not big).persist()
+                self.cached.append(mv)
                 movers = mv.filter(F.col("gain").isNotNull())
                 # star acceptance: targets of accepted moves must be anchors
                 # that are not themselves moving this round
@@ -630,7 +1099,7 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                 n_acc = acc.count()
                 refine_rounds_done += 1
                 if n_acc == 0:
-                    mv.unpersist()
+                    self.close()
                     break
                 acc_sel = (F.broadcast(acc)
                            if n_acc <= _broadcast_row_limit(spark) else acc)
@@ -641,48 +1110,36 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
                 # the last one (one fewer action per pass)
                 if rr < 2:
                     ctot_r = materialize(community_weights(memb_r, vt))
-                mv.unpersist()
+                self.close()
             memb = memb_r
-        t_ref = time.time() - t_ref0
+        self.memb = memb
+        return move_iters, gn, {
+            "move_seconds": round(sum(r["seconds"] for r in rounds_log), 3),
+            "refine_seconds": round(time.time() - t_ref0, 3),
+            "refine_rounds": refine_rounds_done, "rounds": rounds_log}
 
-        total_iters += max(move_iters, 1)
-        p += 1
-        relab, cn = renumber_map_distributed(memb, num_partitions)   # R1+R2
+    def renumber(self, ucom: DataFrame | None):
+        relab, cn = renumber_map_distributed(self.memb, self.num_partitions)   # R1+R2
         relab = materialize(relab)
-        memb_dense = materialize(
-            memb.join(relab, "community").select("id", F.col("cnew").alias("community")))
-        ucom = memb_dense if ucom is None else _compose(ucom, memb_dense, None)
-        rec = {"pass": p, "strategy": "rounds", "move_iterations": move_iters,
-               "vertices": gn, "communities": cn, "edges": int(n_edges),
-               "tolerance": E, "refine_seconds": round(t_ref, 3),
-               "refine_rounds": refine_rounds_done,
-               "move_seconds": round(sum(r["seconds"] for r in rounds_log), 3),
-               "rounds": rounds_log,
-               "pass_seconds": round(time.time() - t0, 3)}
-        metrics.append(rec)
-        if verbose:
-            print(f"[leiden_scale/rounds] pass={p} iters={move_iters} GN={gn} CN={cn} "
-                  f"E={E:g} ({time.time() - t0:.1f}s)")
-        stop = move_iters <= 1 or p >= o.max_passes or float(cn) / gn >= o.aggregation_tolerance
-        if stop or checkpointer is None:
-            ucom = materialize(ucom)
-        if stop:
-            break
-        # aggregate (A9) with the dense relabel
-        ms = memb_dense.select(F.col("id").alias("src"), F.col("community").alias("cs"))
-        md = memb_dense.select(F.col("id").alias("dst"), F.col("community").alias("cd"))
+        self.memb_dense = materialize(
+            self.memb.join(relab, "community").select("id", F.col("cnew").alias("community")))
+        return (self.memb_dense if ucom is None
+                else _compose(ucom, self.memb_dense, None)), cn
+
+    def aggregate(self, lazy_ok: bool):
+        # A9 with the dense relabel
+        ms = self.memb_dense.select(F.col("id").alias("src"), F.col("community").alias("cs"))
+        md = self.memb_dense.select(F.col("id").alias("dst"), F.col("community").alias("cd"))
         g = (
-            g.join(ms, "src").join(md, "dst")
+            self.g.join(ms, "src").join(md, "dst")
             .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
             .agg(F.sum("w").alias("w")))
-        E /= o.tolerance_drop
-        if checkpointer is not None:
-            ucom, g, n_edges, n_vertices = _checkpoint_handoff(
-                spark, checkpointer, p, ucom, g, E, total_iters, metrics, cn)
-        else:
-            g = materialize(g)
-            n_edges, n_vertices = None, cn
-    return ucom, p, total_iters, q
+        return g, None, {}
+
+    def close(self):
+        for df in self.cached:
+            df.unpersist()
+        self.cached.clear()
 
 
 # ---------------------------------------------------------------------------
@@ -690,7 +1147,7 @@ def _rounds_loop(spark: SparkSession, edges0: DataFrame, M: float, o: LeidenOpti
 # ---------------------------------------------------------------------------
 
 def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions | None = None,
-                 refine: bool = True, checkpointer=None, verbose: bool = False,
+                 refine: bool = True, checkpointer=None,
                  num_partitions: int = 32, local_iters: int = 20,
                  driver_threshold: int = 250000,
                  driver_vertex_threshold: int = 20000,
@@ -700,8 +1157,10 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                  rounds_vertex_threshold: int = 300_000_000) -> LeidenRunResult:
     """Distributed Leiden (``refine=True``) / Louvain (``refine=False``).
 
-    ``edges`` must be symmetric and deduplicated (sources/edges.py); a
-    distributed pass raises ``ValueError`` on a dst with no edges of its own.
+    ``edges`` must be symmetric and deduplicated (sources/edges.py); an
+    edge table whose (src, dst) and (dst, src) checksums differ raises
+    ``ValueError`` at setup, and a distributed pass also raises on a dst
+    with no edges of its own.
     ``num_partitions`` fixes the sweep partitioning (determinism across core
     counts). ``driver_threshold``: aggregated graphs at or below this many
     edge rows finish on the driver with the deterministic kernel.
@@ -754,9 +1213,11 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
         F.col("w").cast("double"))
     # A1 (main.cxx:61). The same single aggregation also fingerprints the
     # symmetric-edge-table invariant (every (a,b) paired with (b,a)) that
-    # the lazy-multigraph row-count carry relies on for pass 1: two salted
-    # order-sensitive checksums, forward vs reversed. Sum values are
-    # < 1e6 · |E| so they stay in int64 territory up to ~9×10^12 edges.
+    # every route relies on: two salted order-sensitive checksums, forward
+    # vs reversed. A directed table whose every dst is also a src (e.g. a
+    # directed cycle) passes the in-task dst check but not these. Sum
+    # values are < 1e6 · |E| so they stay in int64 territory up to
+    # ~9×10^12 edges.
     _mrow = edges0.agg(
         F.sum("w").alias("sw"),
         F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000))).alias("hf"),
@@ -764,8 +1225,11 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
         F.sum(F.pmod(F.xxhash64("src", "dst", F.lit(7)), F.lit(1_000_000))).alias("hf7"),
         F.sum(F.pmod(F.xxhash64("dst", "src", F.lit(7)), F.lit(1_000_000))).alias("hr7"),
     ).collect()[0]
+    if (_mrow["hf"], _mrow["hf7"]) != (_mrow["hr"], _mrow["hr7"]):
+        raise ValueError(
+            "leiden_scale: the edge table is not symmetric (some (src, dst) row has "
+            "no (dst, src) partner); run it through sources.edges.symmetricize_df first")
     M = float(_mrow["sw"] or 0.0) / 2.0
-    sym_input = (_mrow["hf"] == _mrow["hr"]) and (_mrow["hf7"] == _mrow["hr7"])
     metrics.append({"phase": "setup", "seconds": round(time.time() - t_setup, 3)})
     if M <= 0:
         empty = spark.createDataFrame([], "id long, community long")
@@ -778,31 +1242,15 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
         strategy = "rounds" if n_est > rounds_vertex_threshold else "sweep"
         v_estimate = n_est
         metrics.append({"phase": "strategy", "chosen": strategy, "v_estimate": n_est})
-    if strategy == "rounds":
-        start = (0, None, None, None, 0, None, None)
-        if checkpointer is not None:
-            resumed = checkpointer.latest(spark)
-            if resumed is not None:
-                rp, rucom, rg, rE, rti, metrics = resumed
-                start = (rp, rucom, rg, rE, rti) + _committed_counts(checkpointer, rp, rg)
-        ucom, p, total_iters, q = _rounds_loop(
-            spark, edges0, M, o, R, refine, local_iters, driver_threshold,
-            driver_vertex_threshold, num_partitions, metrics, verbose,
-            checkpointer=checkpointer, start=start,
-            aff_seed_fraction=aff_seed_fraction)
-        t_q = time.time()
-        if q is None:
-            q = modularity_df(edges0, ucom, M, R, n_vertices=v_estimate)
-        metrics.append({"phase": "final_modularity", "seconds": round(time.time() - t_q, 3)})
-        return LeidenRunResult(ucom, q, p, total_iters, M, metrics)
+    step = (_RoundsPass if strategy == "rounds" else _SweepPass)(
+        spark, M, o, refine, num_partitions, local_iters, aff_seed_fraction,
+        frontier_threshold)
 
-    sc = spark.sparkContext
     g = edges0
     ucom: DataFrame | None = None
     total_iters = 0
     p = 0
     E = o.tolerance
-
     # seed the pass-1 routing decision with the strategy probe's HLL vertex
     # estimate (deterministic for a given input): a small-vertex graph takes
     # the driver kernel IMMEDIATELY instead of paying a full distributed
@@ -812,10 +1260,11 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     # the kernel does in <1s). HLL ±2% error only moves the routing of
     # borderline graphs between two correct paths. driver_threshold=0 is
     # the "force distributed" contract (tests/benchmarks) — honor it by
-    # not seeding.
-    n_vertices: int | None = v_estimate if driver_threshold > 0 else None
+    # not seeding. Only the sweep backend takes the seed: rounds routes
+    # pass 1 on exact counts alone.
+    n_vertices: int | None = (v_estimate if driver_threshold > 0 and strategy == "sweep"
+                              else None)
     n_orig: int | None = None  # exact original-V row count (final-Q broadcast hint)
-    carried: tuple | None = None        # (vid, vtot) for passes ≥ 2
     carried_edges: int | None = None    # known row count of g (lazy multigraph
                                         # relabel or committed pass)
     q: float | None = None              # the driver kernel's Q, if it finishes
@@ -826,26 +1275,14 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
             # restore the strategy-selection state so a resumed run takes
             # the same execution path (and thus produces identical labels)
             carried_edges, n_vertices = _committed_counts(checkpointer, p, g)
-            if verbose:
-                print(f"[leiden_scale] resumed at pass={p}")
-    pending_unpersist: DataFrame | None = None  # prev pass's part_edges feeding a lazy g
-    prev_lazy = False                   # was the previous pass's handoff lazy?
-    part_edges: DataFrame | None = None
-    # per-pass relabel broadcasts: a LAZY multigraph g references its pass's
-    # broadcast from inside a pickled mapInPandas function, so the Python
-    # Broadcast object must stay referenced until that plan has executed —
-    # rebinding the loop variable would let the ContextCleaner destroy it
-    # under the deferred plan. Drained once the next pass's shuffle has
-    # consumed the plan; final cleanup in the finally block.
-    rel_keepalive: list = []
+            log.info("leiden_scale resumed at pass=%d", p)
     try:
         while True:
             t0 = time.time()
-            # a multigraph relabel preserves the row count, and a committed
-            # pass records it, so the previous pass (or the resume) already
-            # knows this pass's n_edges — no count job
+            # a lazy multigraph relabel preserves the row count, and a
+            # committed pass records it, so the previous pass (or the
+            # resume) already knows this pass's n_edges — no count job
             n_edges = carried_edges if carried_edges is not None else g.count()
-            carried_edges = None
 
             # ---- driver fast path: finish small super-graphs with the kernel ----
             # (few edges, or few vertices — dense coarsened graphs converge far
@@ -853,9 +1290,6 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
             if n_edges <= driver_threshold or (
                     n_vertices is not None and n_vertices <= driver_vertex_threshold):
                 memb_df, n_vid, sub = _driver_finish(spark, g, R, E, o, refine, p)
-                if pending_unpersist is not None:
-                    pending_unpersist.unpersist()
-                    pending_unpersist = None
                 ucom = materialize(memb_df if ucom is None else _compose(ucom, memb_df, n_vid))
                 # exact: aggregation keeps every intra-community weight and
                 # every community total, and the super-graph's M is the input's
@@ -866,503 +1300,47 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                                 "vertices": n_vid, "edges": int(n_edges),
                                 "kernel_passes": sub.passes,
                                 "pass_seconds": round(time.time() - t0, 3)})
-                if verbose:
-                    print(f"[leiden_scale] driver-kernel finish: +{sub.passes} passes "
-                          f"({time.time() - t0:.1f}s)")
+                log.info("leiden_scale driver-kernel finish: +%d passes (%.1fs)",
+                         sub.passes, time.time() - t0)
                 break
 
-            # ---- distributed pass (sweep strategy) ----
-            t_ph = time.time()
-            if carried is None:
-                # A2 from the edge table (first pass / resume). Arrow
-                # collect + numpy argsort: skips the pandas block
-                # consolidation and sort_values copy of the |V|-row collect
-                # (src is unique, so a stable argsort is exactly
-                # sort_values' order — values bit-identical)
-                vt = (
-                    g.groupBy("src")
-                    .agg(F.sum("w").alias("vtot"), F.count(F.lit(1)).alias("deg"))
-                    .toArrow()
-                )
-                src_col = vt.column("src").to_numpy(zero_copy_only=False)
-                order = np.argsort(src_col, kind="stable")
-                vid_arr = src_col[order].astype(np.int64, copy=False)
-                vtot_arr = vt.column("vtot").to_numpy(zero_copy_only=False)[order]
-                bal = vt.column("deg").to_numpy(zero_copy_only=False)[order].astype(np.float64)
-            else:
-                # passes ≥ 2: the super-vertex weight IS the previous pass's
-                # community weight (Σ member vtot, self-loops included) — the
-                # driver already holds it, no Spark job needed
-                vid_arr, vtot_arr = carried
-                bal = vtot_arr
-            t_vt = time.time() - t_ph
-            state = DriverState(vid_arr, vtot_arr)
-            t_ph = time.time()
-            part_edges = _range_partition_edges(
-                spark, g, state.vid, bal, num_partitions
-            ).persist()
-            part_edges.count()                     # materialize the pass shuffle
-            if pending_unpersist is not None:
-                # the lazy multigraph relabel has now been folded into this
-                # shuffle's map stage; its input (last pass's partitions) can go
-                pending_unpersist.unpersist()
-                pending_unpersist = None
-            # previous passes' relabel broadcasts are fully consumed now
-            # (lazy g executed by this shuffle; ucom composes materialize
-            # within their own pass) — release the EXECUTOR copies only.
-            # destroy() here would be a latent crash: the cached part_edges
-            # lineage (kept for lost-block recompute) still references the
-            # lazy relabel's mapInPandas closure, and any later job that
-            # re-serializes that lineage (e.g. a fed round's frontier
-            # subquery) dies with INTERNAL_ERROR_BROADCAST. unpersist()
-            # keeps the driver copy re-fetchable; destroy happens once at
-            # run teardown (finally below).
-            for _bc in rel_keepalive:
-                try:
-                    _bc.unpersist()
-                except Exception:
-                    pass
-            t_part = time.time() - t_ph
-            gn = len(state.vid)
-
-            # vid/vtot are pass-constant: broadcast them ONCE per pass; each
-            # round ships only the mutable half (comm, ctot, seed/bound) — half
-            # the per-round driver serialization and torrent traffic, and the
-            # static blocks stay warm in every reused Python worker
-            # per-pass frontier-feed threshold: coarse passes shrink below the
-            # gate and drop back to the full feed of their (small) cached table
-            fthr = (frontier_threshold if frontier_threshold is not None
-                    else (aff_seed_fraction if n_edges >= _FRONTIER_FEED_EDGE_GATE
-                          else 0.0))
-            # task-side affected-neighbor emission cap (= the feed gate): a
-            # round whose global mover count clears it can hand the NEXT
-            # round's frontier src set to the driver for free — see
-            # sweep_partition._emit and the feed construction below
-            fcap = int(fthr * gn)
-            bc_static = sc.broadcast({"vid": state.vid, "vtot": state.vtot,
-                                      "emit_affected": fcap})
-            # per-pass driver-hop accounting: the sweep's only non-executor
-            # segments are (a) the per-round dyn-state broadcast build, (b) the
-            # blocking job+mover-collect action, (c) the numpy state apply —
-            # recorded so scaling runs can attribute core-independent time
-            # (tools/amdahl.py) to a measured segment instead of a guess
-            hop = {"bcast": 0.0, "job_collect": 0.0, "rows_out": 0, "apply": 0.0}
-
-            def run_sweep(dyn_dict, refine_flag, E_cur, direction=0, feed=None):
-                # the in-task sweep sees ~1/P of the graph, so its share of the
-                # global gain budget is E/P — a task that compares its local
-                # gain sum to the GLOBAL E quits ~P× too early and pushes the
-                # convergence work into many more (expensive) coarse rounds
-                E_task = E_cur / max(num_partitions, 1)
-                t_b = time.time()
-                bc = sc.broadcast(dyn_dict)
-                hop["bcast"] += time.time() - t_b
-                try:
-                    t_j = time.time()
-                    out = (feed if feed is not None else part_edges).mapInPandas(
-                        lambda it: sweep_partition(it, {**bc_static.value, **bc.value},
-                                                   M, R, E_task,
-                                                   1 if refine_flag else local_iters,
-                                                   refine_flag, direction),
-                        schema=_MOVES_SCHEMA,
-                    ).toPandas()
-                    hop["job_collect"] += time.time() - t_j
-                    hop["rows_out"] += int(len(out))
-                finally:
-                    bc.destroy()
-                return out
-
-            def frontier_feed(mover_ids):
-                """JVM-side frontier cut for aff-seeded rounds: ship through
-                Arrow only the full adjacency of vertices with a moved
-                neighbor. Broadcast semi-joins are map-side filters, so the
-                range-bucket partitioning and (src,dst) order are preserved —
-                the sweep task contract is unchanged, just on O(frontier)
-                rows. At 100 TB this is what makes late rounds ~free.
-
-                FALLBACK path: used only when the previous rounds' tasks
-                could not emit the affected set themselves (mover count over
-                the gate) — it costs a full extra scan of ``part_edges`` per
-                fed round to rediscover the frontier srcs. The steady-state
-                path is ``feed_from_srcs`` below."""
-                import pandas as pd
-                mv = spark.createDataFrame(
-                    pd.DataFrame({"dst": np.asarray(mover_ids, dtype="int64")}))
-                aff = (
-                    part_edges.join(F.broadcast(mv), "dst", "left_semi")
-                    .select("src")
-                    # seeds self-activate in-task (blocked vertices), so their
-                    # own adjacency must be in the feed even when none of their
-                    # neighbors is seeded
-                    .unionByName(mv.select(F.col("dst").alias("src")))
-                    .distinct()
-                )
-                return part_edges.join(F.broadcast(aff), "src", "left_semi")
-
-            def feed_from_srcs(src_ids):
-                """Steady-state frontier cut: the affected-src set arrived
-                with the previous rounds' mover collect (task-emitted
-                blocked==2 rows — neighbors of movers, already distinct per
-                task), so the feed is ONE map-side broadcast semi-join on a
-                driver-local list: no extra scan of the edge table, no
-                distinct shuffle, no second job per fed round. By graph
-                symmetry the src set equals the set frontier_feed's reverse
-                semi-join would compute — the shipped rows are identical."""
-                import pandas as pd
-                adf = spark.createDataFrame(
-                    pd.DataFrame({"src": np.asarray(src_ids, dtype="int64")}))
-                return part_edges.join(F.broadcast(adf), "src", "left_semi")
-
-            move_iters = 0
-            t_move0 = time.time()
-            el_prev = float("inf")
-            round_log: list[dict] = []
-            changed_pos = None            # aff seed (union of last 2 rounds' movers)
-            prev_pos = None               # movers of the immediately previous round
-            feed_src_ids = None           # task-emitted affected srcs for the feed
-            aff_now_ids = None            # this round's affected set (or None)
-            aff_prev_ids = None           # previous round's
-            prev_sigs: list[tuple] = []   # limit-cycle detection (period ≤ 2)
-            for rnd in range(o.max_iterations):
-                # alternate move direction across coarse rounds to break
-                # cross-partition swap cycles (see sweep_partition docstring);
-                # a single partition has no stale state and sweeps freely
-                direction = 0 if num_partitions <= 1 else (-1 if rnd % 2 == 0 else 1)
-                t_rnd = time.time()
-                snap = state.snapshot(static=False)
-                feed = None
-                feed_kind = None
-                if changed_pos is not None and len(changed_pos):
-                    snap["changed_pos"] = changed_pos
-                    # JVM-side frontier cut only below the threshold fraction
-                    # (default: every seeded round once the pass's edge table
-                    # clears the auto gate — see _FRONTIER_FEED_EDGE_GATE)
-                    if len(changed_pos) < fthr * gn:
-                        if feed_src_ids is not None and _FEED_FROM_TASKS:
-                            feed = feed_from_srcs(feed_src_ids)
-                            feed_kind = "free"
-                        else:
-                            feed = frontier_feed(state.vid[changed_pos])
-                            feed_kind = "scan"
-                out = run_sweep(snap, False, E, direction, feed=feed)
-                move_iters += 1
-                # blocked==2 rows are task-emitted affected neighbors (feed
-                # bookkeeping, not moves): split them off before anything
-                # reads mover counts, seeds, or stop signatures
-                if len(out):
-                    nbr_ids = out.loc[out["blocked"] == 2, "id"].to_numpy(np.int64)
-                    out = out[out["blocked"] != 2]
-                else:
-                    nbr_ids = np.empty(0, dtype=np.int64)
-                # the union is complete only when the GLOBAL mover count is
-                # within the task emission cap (then every task emitted)
-                aff_now_ids = (
-                    np.union1d(np.unique(nbr_ids), out["id"].to_numpy(np.int64))
-                    if 0 < len(out) <= fcap
-                    else (np.empty(0, dtype=np.int64) if len(out) == 0 else None))
-                # split movers from direction-blocked pending moves (blocked=1
-                # rows carry an unchanged label; they are applied nowhere but
-                # stay in the aff seed so the flipped direction releases them)
-                mv = out[out["blocked"] == 0] if len(out) else out
-                n_blocked = int(len(out) - len(mv))
-                if len(mv):
-                    t_ap = time.time()
-                    state.apply_moves(mv["id"].to_numpy(np.int64),
-                                      mv["community_new"].to_numpy(np.int64))
-                    hop["apply"] += time.time() - t_ap
-                if len(out):
-                    # aff-seed the next round only when the frontier is small:
-                    # a big mover set needs a full re-equilibration round (frontier
-                    # waves otherwise keep el hovering at the tolerance), while a
-                    # small one makes the next round O(frontier) — the 100 TB tail.
-                    # Seed with the UNION of the last two rounds' movers AND
-                    # blocked vertices: rounds alternate direction, so a vertex
-                    # activated by a round-r move must stay scannable through r+1
-                    # AND r+2 (one round of each direction), and a vertex whose
-                    # only positive move was direction-blocked (blocked=1 row)
-                    # must be rescanned after the flip (unlike the reference's
-                    # direction-free vaff pruning, inc/leiden.hxx:656,661-662)
-                    pos = state.pos(out["id"].to_numpy(np.int64))
-                    seed = pos if prev_pos is None else np.union1d(pos, prev_pos)
-                    changed_pos = seed if len(seed) < aff_seed_fraction * gn else None
-                    # the feed src set mirrors the seed union EXACTLY:
-                    # neighbors(seed)∪seed = aff_now ∪ aff_prev; missing
-                    # halves (emission over cap) fall back to the JVM scan
-                    if prev_pos is None:
-                        feed_src_ids = aff_now_ids
-                    elif aff_now_ids is not None and aff_prev_ids is not None:
-                        feed_src_ids = np.union1d(aff_now_ids, aff_prev_ids)
-                    else:
-                        feed_src_ids = None
-                    prev_pos = pos
-                else:
-                    changed_pos = np.empty(0, dtype=np.int64)
-                    prev_pos = changed_pos
-                    feed_src_ids = np.empty(0, dtype=np.int64)
-                aff_prev_ids = aff_now_ids
-                el = float(mv["gain"].sum()) if len(mv) else 0.0
-                round_log.append({"seconds": round(time.time() - t_rnd, 2),
-                                  "movers": int(len(mv)), "blocked": n_blocked,
-                                  "el": round(el, 6), "fed": feed is not None,
-                                  # free = frontier srcs task-emitted (no
-                                  # rediscovery scan); scan = legacy fallback
-                                  "feed_src": feed_kind})
-                # a direction-constrained round sees only half the move space, so
-                # convergence needs two consecutive below-tolerance rounds; a
-                # tiny-churn stop bounds synchronous label noise that never
-                # crosses E (the async reference has no such noise floor); a
-                # repeated (movers, gain, id-sum) signature means a period-≤2
-                # limit cycle that will never descend below E — stop
-                sig = (len(mv), round(el, 10),
-                       int(mv["id"].sum()) if len(mv) else 0)
-                cycle = sig in prev_sigs
-                prev_sigs = (prev_sigs + [sig])[-2:]
-                tiny = len(mv) <= max(8, gn // 2000)
-                # plateau: alternating-direction sweeps can descend very slowly
-                # near a swap-rich fixed point (el improves <30% per 3-round
-                # window) — aggregation + the next pass converges the residue
-                # far cheaper than more same-level rounds, so hand off instead
-                # of grinding to the iteration cap (deterministic rule)
-                els = [r["el"] for r in round_log]
-                plateau = len(els) >= 6 and min(els[-3:]) > 0.7 * min(els[-6:-3])
-                # pending blocked moves veto the tiny/tolerance stops (the next
-                # round's flipped direction releases them); cycle and plateau
-                # remain hard stops (bounded work)
-                if len(out) == 0 or cycle or plateau or (
-                        n_blocked == 0 and (tiny or (
-                            el <= E and (direction == 0 or el_prev <= E)))):
-                    break
-                el_prev = el
-            t_move = time.time() - t_move0
-
-            t_ref0 = time.time()
-            t_ref_job = t_ref_apply = 0.0
-            if refine:
-                bound = state.comm.copy()
-                state.comm = state.vid.copy()          # singleton re-init
-                state.ctot = state.vtot.copy()
-                state.comm_pos = np.arange(gn, dtype=np.int64)
-                out = run_sweep(state.snapshot(bound, static=False), True, E)
-                t_ref_job = time.time() - t_ref0
-                if len(out):
-                    # Ascending-id sequential acceptance (the source-still-
-                    # singleton recheck, inc/leiden.hxx:536-548) — vectorized.
-                    # After singleton re-init every mover's source community is
-                    # itself, so the sequential semantics reduce to: a move u→c
-                    # is rejected iff some ACCEPTED mover w < u targeted
-                    # community u (ctot[u] then exceeds vtot[u] when u is
-                    # processed). Dependencies only point from smaller to larger
-                    # ids, so the unique fixpoint is reached by iterating the
-                    # rejection map — each numpy pass settles one more stratum
-                    # of the (short in practice) dependency chains; O(movers)
-                    # work per pass instead of a per-mover Python loop.
-                    out = out.sort_values("id")
-                    uid = out["id"].to_numpy(np.int64)          # ascending
-                    tgt = out["community_new"].to_numpy(np.int64)
-                    ups = state.pos(uid)
-                    tps = state.pos(tgt)
-                    uvt = state.vtot[ups]
-                    INF = np.iinfo(np.int64).max
-                    order = np.argsort(tgt, kind="stable")
-                    tgt_s = tgt[order]
-                    uid_s = uid[order]
-                    seg = np.flatnonzero(np.concatenate([[True], tgt_s[1:] != tgt_s[:-1]]))
-                    seg_tgt = tgt_s[seg]                        # distinct targets
-                    u_seg = np.minimum(np.searchsorted(seg_tgt, uid), len(seg) - 1)
-                    has_in = seg_tgt[u_seg] == uid              # u is someone's target
-                    acc = np.ones(len(uid), dtype=bool)
-                    for _ in range(len(uid) + 1):
-                        # per-target min id among currently-accepted in-movers
-                        # (zero-weight movers leave ctot at vtot — not a
-                        # rejection), then: u rejected iff that min < u
-                        cand_id = np.where(acc[order] & (uvt[order] > 0), uid_s, INF)
-                        seg_min = np.minimum.reduceat(cand_id, seg)
-                        min_in = np.where(has_in, seg_min[u_seg], INF)
-                        new_acc = ~(min_in < uid)
-                        if np.array_equal(new_acc, acc):
-                            break
-                        acc = new_acc
-                    a = np.flatnonzero(acc)
-                    state.comm[ups[a]] = tgt[a]
-                    np.add.at(state.ctot, ups[a], -uvt[a])
-                    np.add.at(state.ctot, tps[a], uvt[a])
-                t_ref_apply = time.time() - t_ref0 - t_ref_job
-            t_ref = time.time() - t_ref0
-            bc_static.destroy()
-
-            total_iters += max(move_iters, 1)
-            p += 1
-            cn = state.n_communities()
-            rec = {"pass": p, "strategy": "sweep", "move_iterations": move_iters,
-                   "vertices": gn, "communities": cn, "edges": int(n_edges),
-                   "tolerance": E, "move_seconds": round(t_move, 3),
-                   "refine_seconds": round(t_ref, 3),
-                   "refine_job_seconds": round(t_ref_job, 3),
-                   "refine_apply_seconds": round(t_ref_apply, 3),
-                   "vt_seconds": round(t_vt, 3),
-                   "partition_seconds": round(t_part, 3),
-                   "driver_hop": {k: (round(v, 3) if isinstance(v, float) else v)
-                                  for k, v in hop.items()},
-                   "rounds": round_log,
-                   "pass_seconds": round(time.time() - t0, 3)}
-            metrics.append(rec)
-            if verbose:
-                print(f"[leiden_scale] pass={p} sweep iters={move_iters} GN={gn} CN={cn} "
-                      f"E={E:g} (move={t_move:.1f}s refine={t_ref:.1f}s total={time.time() - t0:.1f}s)")
-
-            # renumber dense, order-preserving (R2)
+            # ---- distributed pass: the backend's move + refine ----
+            move_iters, gn, fields = step.move(g, n_edges, E, p)
             t_ren = time.time()
-            uniq = np.unique(state.comm)
-            dense = np.searchsorted(uniq, state.comm)
-            n_vertices = int(uniq.size)  # next pass's vertex count
-            # next pass's dense vertex universe + carried vertex weights
-            carried = (np.arange(uniq.size, dtype=np.int64),
-                       state.ctot[state.pos(uniq)].copy())
-            # ONE torrent broadcast of the (vid → dense community) arrays
-            # replaces the driver-serial createDataFrame(|V| rows) plus the
-            # THREE broadcast-exchange builds it used to feed (two aggregate
-            # relabel joins + the dendrogram compose join) — each an O(|V|)
-            # driver collect + hash-relation build per pass, together the
-            # largest block of the measured Amdahl serial intercept. Size is
-            # 2×8B×|V|, the same order as the sweep's per-round state
-            # broadcast, so it holds wherever the sweep strategy itself does
-            # (≤ the documented 3×10⁸-vertex auto-switch to rounds).
-            bc_rel = sc.broadcast({"vid": state.vid.astype(np.int64),
-                                   "dense": dense.astype(np.int64)})
-            rel_keepalive.append(bc_rel)
-            # membership relation built in PARALLEL from the broadcast
-            # arrays (position → (vid[pos], dense[pos])) instead of a
-            # driver-serial createDataFrame of |V| rows; consumed by the
-            # pass-1 ucom and the aggregate relabel joins below
-            memb_df = (
-                spark.range(0, gn, numPartitions=num_partitions)
-                .mapInPandas(_memb_from_positions_fn(bc_rel),
-                             "id long, community long"))
             if ucom is None:
                 n_orig = gn
-                ucom_plan = memb_df
-            else:
-                ucom_plan = ucom.mapInPandas(_compose_np_fn(bc_rel),
-                                             "id long, community long")
+            ucom_plan, cn = step.renumber(ucom)
+            total_iters += max(move_iters, 1)
+            p += 1
+            rec = {"pass": p, "strategy": step.name, "move_iterations": move_iters,
+                   "vertices": gn, "communities": cn, "edges": int(n_edges),
+                   "tolerance": E, **fields, "pass_seconds": round(t_ren - t0, 3)}
+            metrics.append(rec)
+            log.info("leiden_scale pass=%d %s iters=%d GN=%d CN=%d E=%g (%.1fs)",
+                     p, step.name, move_iters, gn, cn, E, t_ren - t0)
             stop = move_iters <= 1 or p >= o.max_passes or float(cn) / gn >= o.aggregation_tolerance
             # a resumable run's checkpoint write materializes ucom (handoff
             # below); a stop pass writes nothing after it
             ucom = materialize(ucom_plan) if stop or checkpointer is None else ucom_plan
             rec["renumber_seconds"] = round(time.time() - t_ren, 3)
             if stop:
-                part_edges.unpersist()
                 break
 
-            # aggregate (A9): relabel both endpoints, sum — self-loops kept.
-            # The relabel stays a JVM broadcast-hash join: routing the O(E)
-            # edge relation through an Arrow/Python map instead was measured
-            # 2.5× slower on the 83M-row pass-2 multigraph (the per-row JVM
-            # join beats the Python hop by far more than the exchange-build
-            # saves) — the serial win is taken on the BUILD side instead,
-            # with memb_df produced in parallel from the broadcast arrays.
             t_agg = time.time()
-            ms = _maybe_broadcast(
-                memb_df.select(F.col("id").alias("src"), F.col("community").alias("cs")), gn)
-            md = _maybe_broadcast(
-                memb_df.select(F.col("id").alias("dst"), F.col("community").alias("cd")), gn)
-            joined = part_edges.join(ms, "src").join(md, "dst")
-            # giant-community skew (O7, SURVEY §7 hard-part 6): when the
-            # heaviest community holds a big share of total weight, the
-            # (cs, cd) grouping key concentrates on one reducer — measured
-            # from the driver's ctot (free), remedied with a two-stage salted
-            # partial aggregation instead of trusting AQE alone
-            heavy = bool(state.ctot.max() / (2.0 * M) > 0.2) if len(state.ctot) else False
-            # poor-collapse passes (CN within ~10× of GN — e.g. a noisy pass 1
-            # where 21.6M edges would "aggregate" to 20M rows) skip the
-            # (cs,cd) groupBy entirely: every downstream consumer SUMS edge
-            # weights (kernel tallies, vertex/community weights, modularity,
-            # the next aggregation), so a relabeled multigraph is semantically
-            # identical, and with a broadcast relabel map the whole aggregation
-            # becomes map-side — no shuffle of the big relation at all
-            # (measured: 37.5s grouped → 13.0s relabel-only at 2 cores on the
-            # 21.6M-edge planted graph). Good-collapse passes keep the groupBy
-            # (18.8M → 52k rows is worth a shuffle); skewed passes keep the
-            # salted two-stage variant.
-            multigraph = (not heavy and gn <= _BROADCAST_VERTEX_LIMIT
-                          and cn >= 0.1 * gn)
-            if heavy:
-                g = (
-                    joined.withColumn("_salt", F.pmod(F.xxhash64("src"), F.lit(16)))
-                    .groupBy("cs", "cd", "_salt").agg(F.sum("w").alias("w"))
-                    .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-                    .agg(F.sum("w").alias("w"))
-                )
-            elif multigraph:
-                g = joined.select(F.col("cs").alias("src"), F.col("cd").alias("dst"),
-                                  F.col("w").cast("double").alias("w"))
-            else:
-                g = (
-                    joined.groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-                    .agg(F.sum("w").alias("w"))
-                )
-            # a resumable run hands the aggregate plan, whichever it is, to
-            # its checkpoint write (below), which runs it exactly once
-            lazy_now = checkpointer is None and multigraph and not prev_lazy
-            if lazy_now:
-                # LAZY handoff: the relabel is a map-side broadcast join with
-                # the SAME row count as its input, and its only consumer is the
-                # next pass's range-partition shuffle — materializing it here
-                # costs a full O(E) block-manager write + re-read purely to
-                # truncate lineage. Hand the plan over lazily instead: the join
-                # fuses into the next shuffle's map stage (one O(E) scan, zero
-                # intermediate writes), the known row count rides along (no
-                # count job), and the persisted input partitions stay alive
-                # until the next pass's shuffle has consumed them (released
-                # there). In practice only the noisy pass 1 takes this path
-                # (later passes collapse well and keep the grouped materialize).
-                pending_unpersist = part_edges
-                if p >= 2 or sym_input:
-                    # the relabel joins are row-preserving ONLY if every dst id
-                    # has a membership row: true by construction on passes ≥ 2
-                    # (vid is the dense 0..C-1 universe) and on pass 1 iff the
-                    # input edge table is symmetric (checked at setup via the
-                    # forward/reverse checksums — a dangling dst on an
-                    # asymmetric input would silently drop rows and make the
-                    # carried count a stale overcount feeding driver_threshold
-                    # routing and the frontier-feed gate)
-                    carried_edges = int(n_edges)
-                # else: keep the lazy plan but carry NO count — the next pass's
-                # g.count() re-measures truthfully (asymmetric-input pass 1)
-            elif checkpointer is None:
-                # grouped aggregates, and a multigraph right after a lazy one:
-                # consecutive lazy handoffs are capped at 1, since a chain of
-                # unmaterialized broadcast joins means a lost/evicted cache
-                # block on a real cluster recomputes through every
-                # unpersisted previous pass (the 100 TB-cluster guard)
+            g, carried_edges, agg_fields = step.aggregate(checkpointer is None)
+            if checkpointer is None and carried_edges is None:
+                # a lazy handoff carries its row count; every other
+                # aggregate is materialized (or, resumable, committed below)
                 g = materialize(g)
-            prev_lazy = lazy_now
-            rec["aggregate_seconds"] = round(time.time() - t_agg, 3)
-            rec["aggregate_salted"] = heavy
-            rec["aggregate_multigraph"] = multigraph
+            rec.update(agg_fields, aggregate_seconds=round(time.time() - t_agg, 3))
             E /= o.tolerance_drop
+            n_vertices = cn
             if checkpointer is not None:
                 ucom, g, carried_edges, n_vertices = _checkpoint_handoff(
-                    spark, checkpointer, p, ucom, g, E, total_iters, metrics, n_vertices)
-            if not lazy_now:
-                part_edges.unpersist()
+                    spark, checkpointer, p, ucom, g, E, total_iters, metrics, cn)
+            step.end_pass()
     finally:
-        # abnormal-exit cleanup (ADVICE r4): an exception between a lazy
-        # handoff and the next pass otherwise leaks the persisted
-        # part_edges blocks for the SparkSession lifetime if the caller
-        # catches and retries. unpersist is idempotent, so the normal
-        # exit paths (which already released their blocks) are no-ops.
-        for _df in (pending_unpersist, part_edges):
-            if _df is not None:
-                try:
-                    _df.unpersist()
-                except Exception:
-                    pass
-        for _bc in rel_keepalive:
-            try:
-                _bc.destroy()
-            except Exception:
-                pass
-        rel_keepalive.clear()
+        step.close()
 
     t_q = time.time()
     if q is None:
@@ -1372,7 +1350,7 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
 
 
 def louvain_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions | None = None,
-                  checkpointer=None, verbose: bool = False, **kw) -> LeidenRunResult:
+                  checkpointer=None, **kw) -> LeidenRunResult:
     """Louvain ablation = Leiden minus refinement (inc/louvain.hxx:1010-1110)."""
     return leiden_scale(spark, edges, options, refine=False,
-                        checkpointer=checkpointer, verbose=verbose, **kw)
+                        checkpointer=checkpointer, **kw)

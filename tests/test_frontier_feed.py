@@ -70,28 +70,6 @@ def test_aff_seed_fraction_default_unchanged(spark):
     assert _labels(a) == _labels(b)
 
 
-def test_feed_from_tasks_matches_legacy_scan(spark, monkeypatch):
-    """The task-emitted frontier (sweep tasks hand back the next round's
-    affected-src set as blocked==2 rows; the feed becomes one broadcast
-    semi-join on a driver-local list) must ship the IDENTICAL row set the
-    legacy JVM rediscovery scan computes (graph symmetry: dsts of mover
-    rows == srcs with a moved neighbor) — labels, modularity, and round
-    structure bit-identical, with the free path actually engaging."""
-    from leiden_communities_openmp_spark.operators import leiden as L
-    edges = _graph(spark)
-    free = _run(spark, edges, 1.0)
-    monkeypatch.setattr(L, "_FEED_FROM_TASKS", False)
-    scan = _run(spark, edges, 1.0)
-    assert _labels(free) == _labels(scan)
-    assert math.isclose(free.modularity, scan.modularity, abs_tol=1e-12)
-    kinds_free = {r.get("feed_src") for m in free.metrics if "pass" in m
-                  for r in m.get("rounds", []) if r.get("fed")}
-    kinds_scan = {r.get("feed_src") for m in scan.metrics if "pass" in m
-                  for r in m.get("rounds", []) if r.get("fed")}
-    assert "free" in kinds_free, "task-emitted feed path never engaged"
-    assert kinds_scan == {"scan"}, "legacy pin leaked the free path"
-
-
 def test_lazy_multigraph_fed_rounds_survive_pass_boundary(spark):
     """Regression: a fed round in a pass AFTER a lazy multigraph handoff
     re-serializes the cached part_edges lineage, which still references the
