@@ -8,7 +8,7 @@ move. That loop is scalar by nature; numpy can only block-vectorize it.
 This module compiles a ~100-line C translation of the *same per-partition
 contract* at first use (gcc -O3, cached per source hash) and loads it via
 ctypes. Pure-python/numpy remains the fallback and the semantic reference
-(operators/sweep.py); set LEIDEN_SPARK_C_KERNEL=0 to force the fallback.
+(operators/sweep.py).
 
 On a real cluster each executor compiles lazily on first task (same
 pattern as cffi/numba JIT caches); no toolchain → automatic fallback.
@@ -126,8 +126,6 @@ def get_kernel():
     if _tried:
         return _kernel
     _tried = True
-    if os.environ.get("LEIDEN_SPARK_C_KERNEL", "1") == "0":
-        return None
     try:
         h = hashlib.md5(_SRC.encode()).hexdigest()[:16]
         so_path = os.path.join(tempfile.gettempdir(), f"leiden_csweep_{h}.so")

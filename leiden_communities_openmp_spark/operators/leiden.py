@@ -243,9 +243,18 @@ _BROADCAST_RELABEL_LIMIT = 8_000_000
 # and hurts small-cluster core-scaling (measured 0.55 composed efficiency
 # at 21.6 M edges, BENCH/scaling_frontier.json); above it the saving
 # dominates (12 tail rounds × 6-32 s each on ≤12 k movers at 86 M rows,
-# BENCH/profile_4m_unfed_8c.json). Callers pin behavior with an explicit
-# frontier_threshold (0.0 = never feed).
+# BENCH/profile_4m_unfed_8c.json). A pass at or above the gate feeds every
+# round seeded below _AFF_SEED_FRACTION; a pass below it never feeds. Both
+# constants are read at call time.
 _FRONTIER_FEED_EDGE_GATE = 50_000_000
+
+# A move round is aff-seeded (rescans only the recent movers, blocked
+# vertices and their neighbors) when that union is below this fraction of
+# the pass's vertices. A perf heuristic, not a correctness knob: a big
+# frontier converges faster with a full re-equilibration round. The sweep
+# seeds from a 2-round window (both directions of one cycle), rounds from a
+# 4-round window (one full color x direction cycle).
+_AFF_SEED_FRACTION = 0.02
 
 
 def _broadcast_row_limit(spark: SparkSession, bytes_per_row: int = 48) -> int:
@@ -478,12 +487,9 @@ class _PassStep:
     committed. ``close`` runs on every exit path."""
 
     def __init__(self, spark: SparkSession, M: float, o: LeidenOptions, refine: bool,
-                 num_partitions: int, local_iters: int, aff_seed_fraction: float,
-                 frontier_threshold: float | None):
+                 num_partitions: int, local_iters: int):
         self.spark, self.M, self.o, self.refine = spark, M, o, refine
         self.num_partitions, self.local_iters = num_partitions, local_iters
-        self.aff_seed_fraction = aff_seed_fraction
-        self.frontier_threshold = frontier_threshold
 
     def end_pass(self):
         pass
@@ -580,9 +586,7 @@ class _SweepPass(_PassStep):
         # static blocks stay warm in every reused Python worker
         # per-pass frontier-feed threshold: coarse passes shrink below the
         # gate and drop back to the full feed of their (small) cached table
-        fthr = (self.frontier_threshold if self.frontier_threshold is not None
-                else (self.aff_seed_fraction if n_edges >= _FRONTIER_FEED_EDGE_GATE
-                      else 0.0))
+        fthr = _AFF_SEED_FRACTION if n_edges >= _FRONTIER_FEED_EDGE_GATE else 0.0
         # task-side affected-neighbor emission cap (= the feed gate): a
         # round whose global mover count clears it hands the NEXT round's
         # frontier src set to the driver for free — see
@@ -594,7 +598,8 @@ class _SweepPass(_PassStep):
         # segments are (a) the per-round dyn-state broadcast build, (b) the
         # blocking job+mover-collect action, (c) the numpy state apply —
         # recorded so scaling runs can attribute core-independent time
-        # (tools/amdahl.py) to a measured segment instead of a guess
+        # (the s + p/c fit of tools/witness.py) to a measured segment
+        # instead of a guess
         hop = {"bcast": 0.0, "job_collect": 0.0, "rows_out": 0, "apply": 0.0}
 
         def run_sweep(dyn_dict, refine_flag, E_cur, direction=0, feed=None):
@@ -704,7 +709,7 @@ class _SweepPass(_PassStep):
                 # direction-free vaff pruning, inc/leiden.hxx:656,661-662)
                 pos = state.pos(out["id"].to_numpy(np.int64))
                 seed = pos if prev_pos is None else np.union1d(pos, prev_pos)
-                changed_pos = seed if len(seed) < self.aff_seed_fraction * gn else None
+                changed_pos = seed if len(seed) < _AFF_SEED_FRACTION * gn else None
                 prev_pos = pos
             else:
                 changed_pos = np.empty(0, dtype=np.int64)
@@ -1035,7 +1040,7 @@ class _RoundsPass(_PassStep):
             # signs (4 rounds), so no positive move is ever dropped
             recent_nm = (recent_nm + [n_all])[-4:]
             fed = seed_nbrs is not None
-            if max(recent_nm) < self.aff_seed_fraction * gn and len(recent) == 4:
+            if max(recent_nm) < _AFF_SEED_FRACTION * gn and len(recent) == 4:
                 seed = recent[0]
                 for r_ in recent[1:]:
                     seed = seed.unionByName(r_)
@@ -1151,8 +1156,6 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                  num_partitions: int = 32, local_iters: int = 20,
                  driver_threshold: int = 250000,
                  driver_vertex_threshold: int = 20000,
-                 frontier_threshold: float | None = None,
-                 aff_seed_fraction: float = 0.02,
                  strategy: str = "auto",
                  rounds_vertex_threshold: int = 300_000_000) -> LeidenRunResult:
     """Distributed Leiden (``refine=True``) / Louvain (``refine=False``).
@@ -1168,22 +1171,9 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     persistence + resume; its committed files are the run's state between
     passes (each pass's checkpoint write is its materialization).
 
-    ``aff_seed_fraction``: a round is aff-seeded (rescan only recent
-    movers+blocked and their neighbors) when that union is below this
-    fraction of the vertices — a perf heuristic (big frontiers converge
-    faster with a full re-equilibration round), not a correctness knob.
-    The sweep path seeds from a 2-round window (both directions of one
-    color-free cycle); the rounds path from a 4-round window (one full
-    color × direction cycle). Applies to BOTH strategies.
-
-    ``frontier_threshold``: additionally cut the Arrow feed itself to the
-    seeded adjacency (JVM semi-join) when the seed is below this fraction
-    of the vertices. ``None`` (default) decides per pass: feed every
-    seeded round when the pass's edge table is at least
-    _FRONTIER_FEED_EDGE_GATE rows (where the cut's fixed ~2 s/round floor
-    is small against the O(edge rows) full-feed transport it replaces —
-    sizing note at the constant), never below it. ``0.0`` pins the feed
-    off; an explicit fraction pins it on for seeds below that fraction.
+    Aff-seeding of move rounds and the sweep's frontier feed are set by
+    the module constants ``_AFF_SEED_FRACTION`` and
+    ``_FRONTIER_FEED_EDGE_GATE`` (sizing notes there).
 
     ``strategy``: ``"sweep"`` (broadcast-state partitioned Gauss-Seidel,
     O(|V|) driver+broadcast arrays — the fast path to ~10⁸-10⁹ vertices),
@@ -1192,7 +1182,10 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     ``rounds`` when the estimated vertex count exceeds
     ``rounds_vertex_threshold`` (default 3×10⁸ ≈ 10 GB of driver/broadcast
     state at 4×8B per vertex — beyond that the sweep's state shipping IS
-    the bottleneck).
+    the bottleneck). Under ``"auto"`` the same estimate also routes pass 1:
+    at or below ``driver_vertex_threshold`` (and ``driver_threshold > 0``)
+    the run goes straight to the driver kernel, whichever backend was
+    picked.
     """
     o = options or LeidenOptions()
     R = o.resolution
@@ -1243,8 +1236,7 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
         v_estimate = n_est
         metrics.append({"phase": "strategy", "chosen": strategy, "v_estimate": n_est})
     step = (_RoundsPass if strategy == "rounds" else _SweepPass)(
-        spark, M, o, refine, num_partitions, local_iters, aff_seed_fraction,
-        frontier_threshold)
+        spark, M, o, refine, num_partitions, local_iters)
 
     g = edges0
     ucom: DataFrame | None = None
@@ -1260,10 +1252,8 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     # the kernel does in <1s). HLL ±2% error only moves the routing of
     # borderline graphs between two correct paths. driver_threshold=0 is
     # the "force distributed" contract (tests/benchmarks) — honor it by
-    # not seeding. Only the sweep backend takes the seed: rounds routes
-    # pass 1 on exact counts alone.
-    n_vertices: int | None = (v_estimate if driver_threshold > 0 and strategy == "sweep"
-                              else None)
+    # not seeding.
+    n_vertices: int | None = v_estimate if driver_threshold > 0 else None
     n_orig: int | None = None  # exact original-V row count (final-Q broadcast hint)
     carried_edges: int | None = None    # known row count of g (lazy multigraph
                                         # relabel or committed pass)

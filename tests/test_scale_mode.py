@@ -71,6 +71,20 @@ def test_louvain_flag(spark):
     assert math.isclose(res.modularity, _gold("karate", "louvain")["modularity"], abs_tol=1e-6)
 
 
+def test_auto_rounds_takes_hll_driver_route(spark):
+    """The strategy probe's HLL vertex estimate routes pass 1 whichever
+    backend it picks: an auto-chosen rounds run on a 34-vertex graph goes
+    straight to the driver kernel instead of paying a distributed pass."""
+    edges, _ = read_mtx_spark(spark, os.path.join(MTX_DIR, "karate.mtx"))
+    res = leiden_scale(spark, edges, LeidenOptions(), strategy="auto",
+                       rounds_vertex_threshold=0)
+    chosen = [m for m in res.metrics if m.get("phase") == "strategy"]
+    assert chosen[0]["chosen"] == "rounds"
+    passes = [m for m in res.metrics if "pass" in m]
+    assert passes[0]["strategy"] == "driver-kernel"
+    assert math.isclose(res.modularity, _gold("karate")["modularity"], abs_tol=1e-6)
+
+
 @pytest.mark.parametrize("strategy,counts", [
     ("sweep", "metadata"), ("sweep", "counted"),
     ("rounds", "metadata"), ("rounds", "counted"),
