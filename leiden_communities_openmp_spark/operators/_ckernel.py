@@ -1,17 +1,19 @@
-"""Optional C acceleration for the partition sweep hot loop.
+"""The partition sweep hot loop, compiled (C) and interpreted (Python).
 
 The in-task local-moving sweep is the reference's innermost loop
 (leidenMoveOmpW, inc/leiden.hxx:646-668): per-vertex neighbor-community
 tally into a dense accumulator with O(touched) clearing
 (inc/leiden.hxx:158-188, 471-476), strictly-positive argmax, immediate
-move. That loop is scalar by nature; numpy can only block-vectorize it.
-This module compiles a ~100-line C translation of the *same per-partition
-contract* at first use (gcc -O3, cached per source hash) and loads it via
-ctypes. Pure-python/numpy remains the fallback and the semantic reference
-(operators/sweep.py).
+move. That loop is scalar by nature. This module compiles a ~100-line C
+translation of it at first use (gcc -O3, cached per source hash) and loads
+it via ctypes; ``sweep_py`` is a line-for-line Python transliteration of
+the same function, used when no toolchain is available and by the tests as
+the readable reference the C kernel must match bit for bit. Both do the
+same float operations in the same order, so every host computes the same
+labels whichever it runs; the Python one is only slower.
 
 On a real cluster each executor compiles lazily on first task (same
-pattern as cffi/numba JIT caches); no toolchain → automatic fallback.
+pattern as cffi/numba JIT caches); no toolchain → ``sweep_py``.
 """
 
 from __future__ import annotations
@@ -116,12 +118,92 @@ double sweep_c(
 }
 """
 
+
+def sweep_py(nu, nv, u_start, row_dstp, row_w, upos, commp, vtot, ctot, bound,
+             is_local, max_iters, refine, direction, M, R, E,
+             active, moved_mask, ever_moved, acc_gain, blocked):
+    """``sweep_c`` in Python, step for step: same arguments minus
+    the C-only scratch buffers (vcout, tkeys, intouch, moved_list), same
+    in-place updates of commp/ctot/active/moved_mask/ever_moved/acc_gain/
+    blocked, same return value. The tally is a dict, whose insertion order
+    is the C kernel's first-touch ``tkeys`` order. The numpy arrays are
+    worked on as Python lists (scalar numpy indexing is ~10x slower) and
+    written back."""
+    out = (commp, ctot, active, moved_mask, ever_moved, acc_gain, blocked)
+    u_start, row_dstp, row_w, upos, vtot, is_local = (
+        a.tolist() for a in (u_start, row_dstp, row_w, upos, vtot, is_local))
+    commp, ctot, active, moved_mask, ever_moved, acc_gain, blocked = (
+        a.tolist() for a in out)
+    if refine:
+        bound = bound.tolist()
+    el_total = 0.0
+    two_mm = 2.0 * M * M
+    for _ in range(max_iters):
+        el = 0.0
+        moved_list = []
+        for k in range(nu):
+            if not active[k]:
+                continue
+            up = upos[k]
+            uvt = vtot[up]
+            dp = commp[up]
+            if refine and ctot[dp] > uvt:
+                continue
+            blocked[k] = 0  # per-scan verdict overwrite
+            vcout = {}
+            b = bound[up] if refine else 0
+            for r in range(u_start[k], u_start[k + 1]):
+                vp = row_dstp[r]
+                if vp == up or (refine and bound[vp] != b):
+                    continue
+                c = commp[vp]
+                vcout[c] = vcout.get(c, 0.0) + row_w[r]
+            vdout = vcout.get(dp, 0.0)
+            ctd = ctot[dp]
+            best = -1
+            emax = 0.0
+            for c, vc in vcout.items():
+                if c == dp:
+                    continue
+                g = (vc - vdout) / M - R * uvt * (uvt + ctot[c] - ctd) / two_mm
+                if direction != 0 and not is_local[c] and (
+                        (direction > 0 and c <= dp) or (direction < 0 and c >= dp)):
+                    # positive move rejected purely by the direction rule
+                    if g > 0.0:
+                        blocked[k] = 1
+                    continue
+                if g > emax or (g == emax and best >= 0 and c < best):
+                    emax = g
+                    best = c
+            if best >= 0 and emax > 0.0:
+                blocked[k] = 0  # a mover is not blocked
+                ctot[dp] -= uvt
+                ctot[best] += uvt
+                commp[up] = best
+                moved_mask[up] = 1
+                moved_list.append(up)
+                ever_moved[k] = 1
+                acc_gain[k] += emax
+                el += emax
+        el_total += el
+        if refine or not moved_list or el <= E:
+            break
+        # next iteration: active = vertices with a moved neighbor (L6)
+        for k in range(nu):
+            active[k] = any(moved_mask[vp] for vp in row_dstp[u_start[k]:u_start[k + 1]])
+        for m in moved_list:
+            moved_mask[m] = 0
+    for a, v in zip(out, (commp, ctot, active, moved_mask, ever_moved, acc_gain, blocked)):
+        a[:] = v
+    return el_total
+
+
 _kernel = None
 _tried = False
 
 
 def get_kernel():
-    """The compiled sweep entry, or None (fallback to numpy)."""
+    """The compiled sweep entry, or None (``sweep_py`` runs instead)."""
     global _kernel, _tried
     if _tried:
         return _kernel
@@ -160,16 +242,13 @@ def get_kernel():
         _kernel = fn
     except (OSError, subprocess.CalledProcessError) as exc:
         # Narrow except: a missing gcc / full tmpfs / loader error falls back
-        # to the numpy sweep — a DIFFERENT algorithm family whose labels may
-        # diverge from the C kernel's, so the fallback must be LOUD: on a
-        # heterogeneous cluster a silent per-executor fallback would break
-        # the fixed-partition-count bit-identical-labels guarantee with no
-        # signal. The warning lands in executor stderr; callers can assert a
-        # single backend run-wide via kernel_backend().
+        # to sweep_py — the same labels, interpreted. The warning lands in
+        # executor stderr; callers can assert the compiled kernel run-wide
+        # via kernel_backend().
         import warnings
         warnings.warn(
             f"leiden C sweep kernel unavailable ({exc!r}); falling back to "
-            "the numpy sweep — labels may differ from C-kernel runs",
+            "the Python sweep — same labels, slower run",
             RuntimeWarning, stacklevel=2)
         _kernel = None
     return _kernel
@@ -177,7 +256,7 @@ def get_kernel():
 
 def kernel_backend() -> str:
     """'c' if the compiled sweep is (or will be) used on this worker,
-    'numpy' otherwise. Drivers can spark-collect this from every executor
-    (e.g. via mapPartitions on a probe range) to assert one backend
-    run-wide before trusting cross-run label identity."""
-    return "c" if get_kernel() is not None else "numpy"
+    'python' otherwise. Drivers can spark-collect this from every executor
+    (e.g. via mapPartitions on a probe range) to assert the fast path
+    run-wide."""
+    return "c" if get_kernel() is not None else "python"

@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._worker import task_entry
-from .aggregations import renumber_map_distributed
+from .aggregations import renumber_map_distributed, vertex_weights
 from .kernel import CsrGraph, LeidenOptions, leiden_exact
 from .materialize import materialize
 from .sweep import DriverState, sweep_partition
@@ -185,12 +185,6 @@ class LeidenRunResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def vertex_weights(edges: DataFrame) -> DataFrame:
-    """A2 (inc/leiden.hxx:216-224): vtot[u] = Σ incident weights (self-loops
-    included)."""
-    return edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("vtot"))
-
-
 def community_weights(memb: DataFrame, vtot: DataFrame) -> DataFrame:
     """A3 (inc/leiden.hxx:252-263): ctot[c] = Σ member vtot."""
     return memb.join(vtot, "id").groupBy("community").agg(F.sum("vtot").alias("ctot"))
@@ -255,6 +249,12 @@ _FRONTIER_FEED_EDGE_GATE = 50_000_000
 # seeds from a 2-round window (both directions of one cycle), rounds from a
 # 4-round window (one full color x direction cycle).
 _AFF_SEED_FRACTION = 0.02
+
+# ``strategy="auto"`` picks the rounds backend when the estimated vertex
+# count exceeds this: 3×10⁸ vertices ≈ 10 GB of driver/broadcast state at
+# 4×8 B per vertex — beyond that the sweep's state shipping IS the
+# bottleneck. Read at call time.
+_ROUNDS_VERTEX_THRESHOLD = 300_000_000
 
 
 def _broadcast_row_limit(spark: SparkSession, bytes_per_row: int = 48) -> int:
@@ -1156,8 +1156,7 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
                  num_partitions: int = 32, local_iters: int = 20,
                  driver_threshold: int = 250000,
                  driver_vertex_threshold: int = 20000,
-                 strategy: str = "auto",
-                 rounds_vertex_threshold: int = 300_000_000) -> LeidenRunResult:
+                 strategy: str = "auto") -> LeidenRunResult:
     """Distributed Leiden (``refine=True``) / Louvain (``refine=False``).
 
     ``edges`` must be symmetric and deduplicated (sources/edges.py); an
@@ -1179,10 +1178,9 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     O(|V|) driver+broadcast arrays — the fast path to ~10⁸-10⁹ vertices),
     ``"rounds"`` (pure-DataFrame bulk-synchronous rounds, no per-vertex
     driver state — the unbounded-scale fallback), or ``"auto"``: pick
-    ``rounds`` when the estimated vertex count exceeds
-    ``rounds_vertex_threshold`` (default 3×10⁸ ≈ 10 GB of driver/broadcast
-    state at 4×8B per vertex — beyond that the sweep's state shipping IS
-    the bottleneck). Under ``"auto"`` the same estimate also routes pass 1:
+    ``rounds`` when the estimated vertex count exceeds the module constant
+    ``_ROUNDS_VERTEX_THRESHOLD`` (sizing note there). Under ``"auto"`` the
+    same estimate also routes pass 1:
     at or below ``driver_vertex_threshold`` (and ``driver_threshold > 0``)
     the run goes straight to the driver kernel, whichever backend was
     picked.
@@ -1232,7 +1230,7 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     if strategy == "auto":
         # one cheap HLL aggregation (no distinct shuffle) decides the path
         n_est = int(edges0.agg(F.approx_count_distinct("src").alias("n")).collect()[0]["n"])
-        strategy = "rounds" if n_est > rounds_vertex_threshold else "sweep"
+        strategy = "rounds" if n_est > _ROUNDS_VERTEX_THRESHOLD else "sweep"
         v_estimate = n_est
         metrics.append({"phase": "strategy", "chosen": strategy, "v_estimate": n_est})
     step = (_RoundsPass if strategy == "rounds" else _SweepPass)(

@@ -5,23 +5,21 @@ Spark analogue of the reference's per-thread asynchronous local-moving
 by ``src`` into contiguous, degree-balanced vertex-id blocks
 (operators/leiden.py ``_range_partition_edges``), so every vertex's full
 adjacency lives in exactly one partition, sorted by (src, dst, w);
-each partition task runs a block-Gauss-Seidel sweep over its own vertices
+each partition task runs a Gauss-Seidel sweep over its own vertices
 against a broadcast snapshot of (membership, vtot, ctot), applying moves to
 its *local* copy as it goes (the same stale-read tolerance as the
 reference's racy OpenMP loop); the driver then reconciles all emitted label
 changes exactly and recomputes community weights. One coarse round == one
 Spark job.
 
-Kernel shape (vectorized, numpy): vertices are processed in blocks. Per
-block, the community tally A4 (inc/leiden.hxx:412-463) runs as one
-lexsort + add.reduceat over the block's adjacency rows, the gain L1
-(inc/properties.hxx:253-256) and argmax L2 as array expressions, and the
-winning candidates are then *accepted sequentially in ascending vertex
-order against live community weights* — the Spark-side equivalent of the
-reference's immediate-apply loop (inc/leiden.hxx:588-597), with the
-acceptance recheck standing in for its atomics. Later blocks see earlier
-blocks' moves (fresh labels), so within a partition this is Gauss-Seidel at
-block granularity and exact at the community-weight level.
+Kernel shape: one task sweeps its vertices in ascending id order, one at a
+time — community tally A4 (inc/leiden.hxx:412-463), gain L1
+(inc/properties.hxx:253-256), strictly-positive argmax L2, and the move
+applied at once to the task's live community weights (inc/leiden.hxx:588-597)
+— then rescans only vertices with a moved neighbor (L6). The loop is
+operators/_ckernel.py ``sweep_c``, compiled at first use, or its Python
+transliteration ``sweep_py`` where no C toolchain is available; both give
+the same labels.
 
 Scale notes: edges (the 100 TB relation) never leave the executors; the
 broadcast state is O(|V|) and works to ~10^8-10^9 vertices — beyond that the
@@ -34,8 +32,11 @@ parallelism, never the computation.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
+from ._ckernel import get_kernel, sweep_py
 from ._worker import task_entry
 
 
@@ -84,15 +85,13 @@ class DriverState:
             s["bound"] = bound
         return s
 
-    def n_communities(self) -> int:
-        return int(np.unique(self.comm).size)
-
 
 def _run_c_sweep(ck, nu, nv, u_start, dstp, w, upos, commp, vtot, ctot,
                  bound, is_local, max_iters, refine, direction, M, R, E,
                  active, moved_mask, ever_moved, acc_gain, blocked):
     """Marshal numpy buffers into the compiled sweep (operators/_ckernel.py).
-    Mutates commp/ctot/active/ever_moved/acc_gain in place."""
+    Mutates commp/ctot/active/moved_mask/ever_moved/acc_gain/blocked in
+    place and returns the total accepted gain, as ``sweep_py`` does."""
     def p(a):
         return a.ctypes.data if a is not None else None
 
@@ -109,20 +108,19 @@ def _run_c_sweep(ck, nu, nv, u_start, dstp, w, upos, commp, vtot, ctot,
     bnd = None
     if refine:
         bnd = np.ascontiguousarray(np.asarray(bound, dtype=np.int64))
-    ck(nu, nv, p(u_start), p(dstp), p(w), p(upos),
-       p(commp), p(vtot), p(ctot), p(bnd), p(is_local),
-       int(max(max_iters, 1)), 1 if refine else 0, int(direction),
-       float(M), float(R), float(E),
-       p(vcout), p(tkeys), p(intouch),
-       p(active), p(moved_mask), p(moved_list),
-       p(ever_moved), p(acc_gain), p(blocked))
+    return ck(nu, nv, p(u_start), p(dstp), p(w), p(upos),
+              p(commp), p(vtot), p(ctot), p(bnd), p(is_local),
+              int(max_iters), 1 if refine else 0, int(direction),
+              float(M), float(R), float(E),
+              p(vcout), p(tkeys), p(intouch),
+              p(active), p(moved_mask), p(moved_list),
+              p(ever_moved), p(acc_gain), p(blocked))
 
 
 @task_entry
 def sweep_partition(pdf_iter, state: dict, M: float, R: float, E: float,
-                    max_local_iters: int, refine: bool, direction: int = 0,
-                    block: int = 8192):
-    """Executor-side vectorized sweep over one adjacency partition.
+                    max_local_iters: int, refine: bool, direction: int = 0):
+    """Executor-side sweep over one adjacency partition.
 
     ``pdf_iter``: iterator of pandas batches with columns (src, dst, w),
     sorted by (src, dst) within the partition. Yields one pandas DataFrame
@@ -146,14 +144,11 @@ def sweep_partition(pdf_iter, state: dict, M: float, R: float, E: float,
                           "community_new": pd.Series([], dtype="int64"),
                           "gain": pd.Series([], dtype="float64"),
                           "blocked": pd.Series([], dtype="int32")})
-    parts = list(pdf_iter)
+    parts = [p for p in pdf_iter if len(p)]
     if not parts:
         yield empty
         return
     edf = pd.concat(parts, ignore_index=True)
-    if len(edf) == 0:
-        yield empty
-        return
 
     vid = state["vid"]
     nv = len(vid)
@@ -184,7 +179,6 @@ def sweep_partition(pdf_iter, state: dict, M: float, R: float, E: float,
     is_local = np.zeros(nv, dtype=bool)
     is_local[upos] = True
 
-    two_mm = 2.0 * M * M
     ever_moved = np.zeros(nu, dtype=bool)
     acc_gain = np.zeros(nu, dtype=np.float64)
 
@@ -253,155 +247,11 @@ def sweep_partition(pdf_iter, state: dict, M: float, R: float, E: float,
                                 np.full(len(nbr), 2, np.int32)]), dtype="int32"),
         })
 
-    from ._ckernel import get_kernel
     ck = get_kernel()
-    if ck is not None:
-        _run_c_sweep(ck, nu, nv, u_start, dstp, w, upos, commp, vtot, ctot,
-                     bound, is_local, max_local_iters, refine, direction, M, R, E,
-                     active, moved_vpos_mask, ever_moved, acc_gain, blocked_u)
-        yield _emit(state["comm"])
-        return
-
-    for it_no in range(max(max_local_iters, 1)):
-        el = 0.0
-        any_move = False
-        if it_no > 0:
-            np.logical_and(active, False, out=active)
-            touched = moved_vpos_mask[dstp]          # row's dst moved last iter
-            active[row_u[touched]] = True
-            moved_vpos_mask[:] = False
-        if not active.any():
-            break
-        act_idx = np.flatnonzero(active)
-        for b0 in range(0, len(act_idx), block):
-            blk = act_idx[b0:b0 + block]
-            blocked_u[blk] = 0               # per-scan verdict overwrite
-            # ragged gather of the block's adjacency rows
-            lens = u_start[blk + 1] - u_start[blk]
-            tot = int(lens.sum())
-            if tot == 0:
-                continue
-            step = np.ones(tot, dtype=np.int64)
-            step[0] = u_start[blk[0]]
-            cs = np.cumsum(lens)[:-1]
-            if len(cs):
-                step[cs] = u_start[blk[1:]] - (u_start[blk[:-1]] + lens[:-1] - 1)
-            rows = np.cumsum(step)
-            ru = row_u[rows]
-            rv = dstp[rows]
-            rw = w[rows]
-            rup = upos[ru]
-            mask = rv != rup                    # skip self (inc/leiden.hxx:414)
-            if refine:
-                mask &= bound[rv] == bound[rup]  # bound constraint (hxx:415)
-            if not mask.any():
-                continue
-            ru, rv, rw, rup = ru[mask], rv[mask], rw[mask], rup[mask]
-            rc = commp[rv]
-            # A4 tally: vcout[(u, c)] = Σ w — one lexsort + reduceat
-            order = np.lexsort((rc, ru))
-            gu = ru[order]
-            gc = rc[order]
-            gw = rw[order]
-            newgrp = np.empty(len(gu), dtype=bool)
-            newgrp[0] = True
-            np.logical_or(gu[1:] != gu[:-1], gc[1:] != gc[:-1], out=newgrp[1:])
-            starts = np.flatnonzero(newgrp)
-            vcout = np.add.reduceat(gw, starts)
-            g_u = gu[starts]
-            g_c = gc[starts]
-            g_up = upos[g_u]
-            g_d = commp[g_up]
-            # vdout: the tally of u's own community
-            g_ui = np.searchsorted(blk, g_u)        # dense index within block
-            vd = np.zeros(len(blk), dtype=np.float64)
-            own = g_c == g_d
-            vd[g_ui[own]] = vcout[own]
-            vdout = vd[g_ui]
-            uvt = vtot[g_up]
-            gain = (vcout - vdout) / M - R * uvt * (uvt + ctot[g_c] - ctot[g_d]) / two_mm
-            cand = (g_c != g_d) & (gain > 0.0)
-            if refine:
-                cand &= ctot[g_d] <= uvt        # singleton source (hxx:590)
-            if direction != 0:
-                rem = ~is_local[g_c]
-                if direction > 0:
-                    dir_ok = ~rem | (vid[g_c] > vid[g_d])
-                else:
-                    dir_ok = ~rem | (vid[g_c] < vid[g_d])
-                # positive moves rejected purely by the direction rule:
-                # flag their source vertices (cleared below if they move)
-                blocked_u[g_u[cand & ~dir_ok]] = 1
-                cand &= dir_ok
-            idx = np.flatnonzero(cand)
-            if idx.size == 0:
-                continue
-            # L2 argmax per u, deterministic tie-break (max gain, min comm id)
-            cu = g_u[idx]
-            o2 = np.lexsort((-vid[g_c[idx]], gain[idx], cu))
-            cu_s = cu[o2]
-            last = np.flatnonzero(np.append(cu_s[1:] != cu_s[:-1], True))
-            pick = idx[o2[last]]                # one winner per u, u ascending
-            # sequential acceptance against LIVE ctot (the reference's
-            # immediate-apply, inc/leiden.hxx:588-597): block-start values
-            # pre-gathered vectorized; in-loop freshness via a sparse delta
-            # map of communities touched within the block (plain-Python
-            # scalars in the hot loop — ~10× numpy scalar indexing)
-            p_u = g_u[pick].tolist()
-            p_up = g_up[pick].tolist()
-            p_cp = g_c[pick].tolist()
-            p_dp = g_d[pick].tolist()
-            p_vc = vcout[pick].tolist()
-            p_vd = vdout[pick].tolist()
-            p_uv = vtot[g_up[pick]].tolist()
-            p_g0 = gain[pick].tolist()
-            ct_c0 = ctot[g_c[pick]].tolist()
-            ct_d0 = ctot[g_d[pick]].tolist()
-            delta: dict[int, float] = {}
-            mv_up: list[int] = []
-            mv_cp: list[int] = []
-            dget = delta.get
-            gains_l: list[float] = []
-            ks: list[int] = []
-            for t in range(len(p_u)):
-                dp = p_dp[t]
-                cp = p_cp[t]
-                uv = p_uv[t]
-                if dp in delta or cp in delta:
-                    ctd = ct_d0[t] + dget(dp, 0.0)
-                    if refine and ctd > uv:
-                        continue
-                    g = (p_vc[t] - p_vd[t]) / M \
-                        - R * uv * (uv + ct_c0[t] + dget(cp, 0.0) - ctd) / two_mm
-                    if g <= 0.0:
-                        continue
-                else:
-                    if refine and ct_d0[t] > uv:
-                        continue
-                    g = p_g0[t]          # untouched communities → the
-                                          # vectorized gain is already live
-                delta[dp] = dget(dp, 0.0) - uv
-                delta[cp] = dget(cp, 0.0) + uv
-                mv_up.append(p_up[t])
-                mv_cp.append(cp)
-                ks.append(p_u[t])
-                gains_l.append(g)
-                el += g
-                any_move = True
-            if mv_up:
-                mv_up_a = np.asarray(mv_up, dtype=np.int64)
-                commp[mv_up_a] = np.asarray(mv_cp, dtype=np.int64)
-                moved_vpos_mask[mv_up_a] = True
-                ks_a = np.asarray(ks, dtype=np.int64)
-                blocked_u[ks_a] = 0              # a mover is not blocked
-                ever_moved[ks_a] = True
-                np.add.at(acc_gain, ks_a, np.asarray(gains_l, dtype=np.float64))
-                dk = np.fromiter(delta.keys(), dtype=np.int64, count=len(delta))
-                dv = np.fromiter(delta.values(), dtype=np.float64, count=len(delta))
-                np.add.at(ctot, dk, dv)
-        if refine or not any_move or el <= E:
-            break
-
+    sweep = sweep_py if ck is None else partial(_run_c_sweep, ck)
+    sweep(nu, nv, u_start, dstp, w, upos, commp, vtot, ctot, bound, is_local,
+          max(max_local_iters, 1), refine, direction, M, R, E,
+          active, moved_vpos_mask, ever_moved, acc_gain, blocked_u)
     # emit only NET movers (final label != round-start label): the driver
     # applies labels and recomputes ctot, so internal ping-pong that lands
     # back home carries no information and would only inflate the collect

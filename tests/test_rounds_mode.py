@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from leiden_communities_openmp_spark.operators import aggregations as agg
+from leiden_communities_openmp_spark.operators import leiden as L
 from leiden_communities_openmp_spark.operators.graphgen import block_circulant
 from leiden_communities_openmp_spark.operators.kernel import LeidenOptions
 from leiden_communities_openmp_spark.operators.leiden import leiden_scale
@@ -67,9 +68,9 @@ def test_auto_strategy_picks_sweep_below_threshold(spark):
     assert chosen and chosen[0]["chosen"] == "sweep"
 
 
-def test_auto_strategy_picks_rounds_above_threshold(spark, graph):
-    res = leiden_scale(spark, graph, LeidenOptions(), strategy="auto",
-                       rounds_vertex_threshold=10)
+def test_auto_strategy_picks_rounds_above_threshold(spark, graph, monkeypatch):
+    monkeypatch.setattr(L, "_ROUNDS_VERTEX_THRESHOLD", 10)
+    res = leiden_scale(spark, graph, LeidenOptions(), strategy="auto")
     chosen = [m for m in res.metrics if m.get("phase") == "strategy"]
     assert chosen and chosen[0]["chosen"] == "rounds"
 

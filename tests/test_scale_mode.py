@@ -15,6 +15,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from leiden_communities_openmp_spark.operators import leiden as L
 from leiden_communities_openmp_spark.operators.kernel import LeidenOptions
 from leiden_communities_openmp_spark.operators.leiden import (
     leiden_scale, louvain_scale, modularity_df,
@@ -71,13 +72,13 @@ def test_louvain_flag(spark):
     assert math.isclose(res.modularity, _gold("karate", "louvain")["modularity"], abs_tol=1e-6)
 
 
-def test_auto_rounds_takes_hll_driver_route(spark):
+def test_auto_rounds_takes_hll_driver_route(spark, monkeypatch):
     """The strategy probe's HLL vertex estimate routes pass 1 whichever
     backend it picks: an auto-chosen rounds run on a 34-vertex graph goes
     straight to the driver kernel instead of paying a distributed pass."""
     edges, _ = read_mtx_spark(spark, os.path.join(MTX_DIR, "karate.mtx"))
-    res = leiden_scale(spark, edges, LeidenOptions(), strategy="auto",
-                       rounds_vertex_threshold=0)
+    monkeypatch.setattr(L, "_ROUNDS_VERTEX_THRESHOLD", 0)
+    res = leiden_scale(spark, edges, LeidenOptions(), strategy="auto")
     chosen = [m for m in res.metrics if m.get("phase") == "strategy"]
     assert chosen[0]["chosen"] == "rounds"
     passes = [m for m in res.metrics if "pass" in m]
@@ -194,7 +195,7 @@ _STRATEGY_KEYS = {
 
 
 @pytest.mark.parametrize("strategy", ["sweep", "rounds"])
-def test_metrics_schema(spark, strategy):
+def test_metrics_schema(spark, strategy, monkeypatch):
     """LeidenRunResult.metrics keeps the schema its docstring documents —
     every key perfbench/run.py::leiden_layers and sinks.py read included,
     so a refactor that drops one fails here instead of silently zeroing a
@@ -202,8 +203,9 @@ def test_metrics_schema(spark, strategy):
     selection: one forced-distributed pass of the chosen backend, then the
     driver kernel (vertex threshold 30 > pass 1's communities)."""
     edges, _ = read_mtx_spark(spark, os.path.join(MTX_DIR, "karate.mtx"))
+    monkeypatch.setattr(L, "_ROUNDS_VERTEX_THRESHOLD",
+                        0 if strategy == "rounds" else 10**9)
     res = leiden_scale(spark, edges, LeidenOptions(), strategy="auto",
-                       rounds_vertex_threshold=0 if strategy == "rounds" else 10**9,
                        driver_threshold=0, driver_vertex_threshold=30,
                        num_partitions=4, local_iters=4)
     setup, chosen, distributed, finish, final_q = res.metrics

@@ -48,6 +48,7 @@ def test_leg_md5_matches_direct_run_and_phases_fit_wall(spark, monkeypatch):
     assert math.isclose(leg["layers"]["leiden.edges_per_s"] * leg["seconds"],
                         leg["layers"]["leiden.edge_rows_total"], rel_tol=1e-3)
     assert leg["steal_s"] >= 0 and leg["cpu_s"]["jvm"] > 0
+    assert leg["busy_cores"] == round(sum(leg["cpu_s"].values()) / leg["seconds"], 3) > 0
 
 
 def test_efficiency_and_fit_hand_worked():
@@ -61,23 +62,31 @@ def test_efficiency_and_fit_hand_worked():
     s, p = witness.amdahl_fit(40.0, 10.0, 2, 8)
     assert math.isclose(s, 0.0, abs_tol=1e-12) and math.isclose(p, 80.0)
     assert witness.efficiency(0.0, 0.0, 2, 4) is None
+    # a local[2] leg whose tree used 27.6 CPU-s in 12 s kept 2.3 cores busy
+    assert math.isclose(witness.busy_cores({"driver": 1.2, "jvm": 22.4, "py_worker": 4.0},
+                                           12.0), 2.3)
 
 
 def test_compare_two_legs():
-    def leg(cores, move_s, seconds, md5):
+    def leg(cores, move_s, seconds, md5, busy=None):
         layers = {f"leiden.{k}": 0.0 for k in witness.PHASES}
         layers["leiden.move_s"] = move_s
         layers["leiden.unattributed_s"] = seconds - move_s
         return {"cores": cores, "seconds": seconds, "layers": layers,
-                "labels_md5": md5, "steal_s": 0.5}
+                "busy_cores": busy or cores, "labels_md5": md5, "steal_s": 0.5}
 
-    out = witness.compare(leg(2, 10.0, 12.0, "a"), leg(4, 6.0, 8.0, "a"))
-    assert out["cores"] == [2, 4] and out["labels_identical"]
+    # local[2] kept 2.4 cores busy, local[4] 3.6: a busy-core ratio of 1.5
+    out = witness.compare(leg(2, 10.0, 12.0, "a", 2.4), leg(4, 6.0, 8.0, "a", 3.6))
+    assert out["cores"] == [2, 4] and out["busy_cores"] == [2.4, 3.6]
+    assert out["labels_identical"]
+    # move: speedup 10/6 over 2 nominal (0.833), over 1.5 busy (1.111)
     move = out["phases"]["move_s"]
-    assert move == {"t": [10.0, 6.0], "eff": 0.833, "s": 2.0, "p": 16.0}
+    assert move == {"t": [10.0, 6.0], "eff": 0.833, "eff_busy": 1.111, "s": 2.0, "p": 16.0}
     # unattributed 2 s on both legs: all serial
-    assert out["phases"]["unattributed_s"] == {"t": [2.0, 2.0], "eff": 0.5, "s": 2.0, "p": 0.0}
+    assert out["phases"]["unattributed_s"] == {
+        "t": [2.0, 2.0], "eff": 0.5, "eff_busy": 0.667, "s": 2.0, "p": 0.0}
+    # end to end: speedup 1.5 over 2 nominal, over 1.5 busy
     e2e = out["phases"]["end_to_end"]
-    assert e2e == {"t": [12.0, 8.0], "eff": 0.75, "s": 4.0, "p": 16.0}
-    assert out["phases"]["vt_s"]["eff"] is None
+    assert e2e == {"t": [12.0, 8.0], "eff": 0.75, "eff_busy": 1.0, "s": 4.0, "p": 16.0}
+    assert out["phases"]["vt_s"]["eff"] is None and out["phases"]["vt_s"]["eff_busy"] is None
     assert not witness.compare(leg(2, 1.0, 2.0, "a"), leg(4, 1.0, 2.0, "b"))["labels_identical"]

@@ -23,14 +23,19 @@ Prints one JSON line per leg as it finishes:
   and ``leiden.edges_per_s`` are the benchmark's definitions;
 - ``cpu_s``: driver / JVM / Python-worker CPU over the call
   (``perfbench/probes.py::cpu_split``), ``steal_s``: host steal over it;
+- ``busy_cores``: Σ ``cpu_s`` / ``seconds``, the cores the leg's process
+  tree kept busy. A ``local[N]`` leg can use more than N: JVM GC and JIT
+  threads and the Arrow-fed Python workers run beside the N task slots;
 - ``labels_md5``: md5 of ``json.dumps(sorted((id, community)))``;
 - ``metrics``: the raw ``LeidenRunResult.metrics``.
 
 With two or more core counts a last line compares the lowest and highest:
-per phase and end to end, the efficiency ``(t_lo/t_hi)/(c_hi/c_lo)`` and
-the exact two-point fit ``t(c) = s + p/c`` (serial ``s``, parallel ``p``;
-a negative ``s`` means the phase ran super-linear in that window). The
-tool exits non-zero when the legs' ``labels_md5`` differ.
+per phase and end to end, the efficiency ``eff`` = ``(t_lo/t_hi)/(c_hi/c_lo)``
+over the nominal core counts, ``eff_busy`` = ``(t_lo/t_hi)/(busy_hi/busy_lo)``
+over the two legs' call-wide ``busy_cores``, and the exact two-point fit
+``t(c) = s + p/c`` (serial ``s``, parallel ``p``; a negative ``s`` means the
+phase ran super-linear in that window). The tool exits non-zero when the
+legs' ``labels_md5`` differ.
 """
 
 from __future__ import annotations
@@ -79,12 +84,14 @@ def run_leg(spark, edges, strategy: str = "sweep") -> dict:
     res = leiden_scale(spark, edges, LeidenOptions(), **kw)
     call_s = time.time() - t0
     cpu1, steal1 = cpu_split(), steal_seconds()
+    seconds = round(call_s, 3)
+    cpu_s = {k: round(cpu1[k] - cpu0[k], 2) for k in cpu1}
     return {
-        "strategy": strategy, "seconds": round(call_s, 3),
+        "strategy": strategy, "seconds": seconds,
         "passes": res.passes, "iterations": res.iterations,
         "modularity": res.modularity, "labels_md5": labels_md5(res.membership),
         "layers": leiden_layers(res, call_s),
-        "cpu_s": {k: round(cpu1[k] - cpu0[k], 2) for k in cpu1},
+        "cpu_s": cpu_s, "busy_cores": round(busy_cores(cpu_s, seconds), 3),
         "steal_s": round(steal1 - steal0, 2),
         "metrics": res.metrics,
     }
@@ -134,7 +141,12 @@ def spawn_leg(graph: str, size: int, cores: int, strategy: str) -> dict:
                        f"{out.stdout[-2000:]}\n{out.stderr[-4000:]}")
 
 
-def efficiency(t_lo: float, t_hi: float, c_lo: int, c_hi: int) -> float | None:
+def busy_cores(cpu_s: dict[str, float], seconds: float) -> float:
+    """Cores a leg kept busy: its process tree's CPU seconds over wall seconds."""
+    return sum(cpu_s.values()) / seconds
+
+
+def efficiency(t_lo: float, t_hi: float, c_lo: float, c_hi: float) -> float | None:
     """Speedup over core ratio: (t_lo/t_hi)/(c_hi/c_lo); None if t_hi is 0."""
     return (t_lo / t_hi) / (c_hi / c_lo) if t_hi > 0 else None
 
@@ -146,18 +158,23 @@ def amdahl_fit(t_lo: float, t_hi: float, c_lo: int, c_hi: int) -> tuple[float, f
 
 
 def compare(lo: dict, hi: dict) -> dict:
-    """Per-phase and end-to-end efficiency and s + p/c fit of two legs."""
+    """Per-phase and end-to-end efficiency (over nominal and busy cores)
+    and s + p/c fit of two legs."""
     c_lo, c_hi = lo["cores"], hi["cores"]
+    b_lo, b_hi = lo["busy_cores"], hi["busy_cores"]
     rows = {k: (lo["layers"][f"leiden.{k}"], hi["layers"][f"leiden.{k}"]) for k in PHASES}
     rows["end_to_end"] = (lo["seconds"], hi["seconds"])
     table = {}
     for name, (t_lo, t_hi) in rows.items():
         s, p = amdahl_fit(t_lo, t_hi, c_lo, c_hi)
         eff = efficiency(t_lo, t_hi, c_lo, c_hi)
+        eff_busy = efficiency(t_lo, t_hi, b_lo, b_hi)
         table[name] = {"t": [round(t_lo, 3), round(t_hi, 3)],
                        "eff": None if eff is None else round(eff, 3),
+                       "eff_busy": None if eff_busy is None else round(eff_busy, 3),
                        "s": round(s, 3), "p": round(p, 3)}
-    return {"cores": [c_lo, c_hi], "labels_identical": lo["labels_md5"] == hi["labels_md5"],
+    return {"cores": [c_lo, c_hi], "busy_cores": [b_lo, b_hi],
+            "labels_identical": lo["labels_md5"] == hi["labels_md5"],
             "steal_s": [lo["steal_s"], hi["steal_s"]], "phases": table}
 
 
