@@ -1,6 +1,15 @@
 """North-rule companion operators sharing the canonical edge table:
 PageRank, connected components, label propagation, triangle count
-(SURVEY.md §2.6). All pure DataFrame ops — no Python in the hot path.
+(SURVEY.md §2.6).
+
+Routing, the same rule ``leiden_scale`` applies to its own input: every
+public operator first runs ONE bounded collect of (src, dst) through Arrow.
+A table of at most ``_DRIVER_EDGE_ROWS`` rows is finished in numpy on the
+driver and returned through ``spark.createDataFrame``; on such a table the
+DataFrame loops below cost a Spark job per step for milliseconds of work.
+A larger table runs the pure-DataFrame loops (no Python in their hot path),
+which are the scale path. Both routes give the same rows and schema
+(tests/test_companions.py pins the parity).
 
 Every operator is deterministic (fixed iteration counts or fixed-point with
 deterministic tie-breaks) so the DuckDB oracles in __spark_entry__.py can
@@ -9,6 +18,7 @@ match values exactly.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -30,6 +40,42 @@ def _materialize(df: DataFrame) -> DataFrame:
     return _materialize_reset(df)
 
 
+# Edge tables of at most this many rows take the driver route; read at call
+# time. It is leiden_scale's default driver_threshold, so a graph the Leiden
+# driver kernel finishes is finished on the driver here too. 0 forces the
+# DataFrame route, the same contract as driver_threshold=0.
+_DRIVER_EDGE_ROWS = 250_000
+# closed-wedge lookups per triangle chunk: bounds the driver's scratch arrays
+# (a few int64 arrays of this length) whatever the wedge count
+_WEDGE_CHUNK = 1 << 21
+
+
+def _small_graph(edges: DataFrame):
+    """The routing probe: one bounded collect of (src, dst). Returns
+    ``(vid, s, d)`` — the sorted distinct ids and each row's endpoints as
+    positions into them — when the table has at most ``_DRIVER_EDGE_ROWS``
+    rows, else None. Positions preserve id order, so every smallest-id rule
+    below compares positions."""
+    bound = _DRIVER_EDGE_ROWS
+    if bound <= 0:
+        return None
+    pdf = edges.select("src", "dst").limit(bound + 1).toPandas()
+    if len(pdf) > bound:
+        return None
+    src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+    vid = np.unique(np.concatenate([src, dst]))
+    return vid, np.searchsorted(vid, src), np.searchsorted(vid, dst)
+
+
+def _driver_frame(edges: DataFrame, cols: dict, ddl: str) -> DataFrame:
+    """The driver route's result. ``ddl`` may name ``{id}``: the type the
+    DataFrame route gives ids (src and dst's common type)."""
+    import pandas as pd
+
+    id_type = _vertices(edges).schema["id"].dataType.simpleString()
+    return edges.sparkSession.createDataFrame(pd.DataFrame(cols), ddl.format(id=id_type))
+
+
 def pagerank(edges: DataFrame, iterations: int = 5, damping: float = 0.85) -> DataFrame:
     """Fixed-iteration PageRank on the directed edge table → (id, rank).
 
@@ -44,6 +90,17 @@ def pagerank(edges: DataFrame, iterations: int = 5, damping: float = 0.85) -> Da
     that removes a full |V|-scan job + driver round-trip per iteration.
     Deterministic for a fixed iteration count.
     """
+    small = _small_graph(edges)
+    if small is not None:
+        vid, s, d = small
+        n = len(vid)
+        rank = np.full(n, 1.0 / max(n, 1))
+        outdeg = np.bincount(s, minlength=n)      # duplicates and self-loops count
+        dangling = outdeg == 0
+        for _ in range(iterations if n else 0):
+            inflow = np.bincount(d, weights=rank[s] / outdeg[s], minlength=n)
+            rank = (1.0 - damping) / n + damping * (inflow + rank[dangling].sum() / float(n))
+        return _driver_frame(edges, {"id": vid, "rank": rank}, "id {id}, rank double")
     verts = _materialize(_vertices(edges))
     n = verts.count()
     if n == 0:  # empty edge table (e.g. a filter matched nothing)
@@ -115,7 +172,35 @@ def connected_components_with_stats(edges: DataFrame, max_rounds: int = 60):
     only shrinks after the first rounds; AQE handles the star-root skew
     (the component-min key concentrates, exactly what skew-join splitting
     is for).
+
+    Driver route: min-root hooking plus pointer jumping, which is not
+    bounded by the diameter either (each round leaves one root per local
+    minimum of the contracted graph); ``rounds`` counts its hooking rounds.
     """
+    small = _small_graph(edges)
+    if small is not None:
+        vid, s, d = small
+        keep = s != d
+        u, v = s[keep], d[keep]
+        root = np.arange(len(vid))
+        rounds = 0
+        while rounds < max_rounds:
+            ru, rv = root[u], root[v]
+            if np.array_equal(ru, rv):
+                break
+            rounds += 1
+            # every root with a smaller neighbouring root hooks onto the
+            # smallest one; a component's minimum is never hooked, so it
+            # ends as the component's root
+            np.minimum.at(root, np.maximum(ru, rv), np.minimum(ru, rv))
+            while True:                           # pointer jumping to stars
+                nxt = root[root]
+                if np.array_equal(nxt, root):
+                    break
+                root = nxt
+        labels = _driver_frame(edges, {"id": vid, "component": vid[root]},
+                               "id {id}, component {id}")
+        return labels, rounds
     ee = _materialize(
         edges.filter(F.col("src") != F.col("dst"))
         .select(F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v"))
@@ -174,6 +259,20 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     fully deterministic, and exactly expressible in SQL for the oracle.
     Vertices keep their label when they have no neighbors.
     """
+    small = _small_graph(edges)
+    if small is not None:
+        vid, s, d = small
+        n = len(vid)
+        label = np.arange(n)
+        for _ in range(rounds):
+            pair, cnt = np.unique(s * n + label[d], return_counts=True)
+            ps, pl = np.divmod(pair, n)
+            # per src: the highest count first, then the smallest label
+            order = np.lexsort((pl, -cnt, ps))
+            ps, pl = ps[order], pl[order]
+            _, first = np.unique(ps, return_index=True)
+            label[ps[first]] = pl[first]
+        return _driver_frame(edges, {"id": vid, "label": vid[label]}, "id {id}, label {id}")
     labels = _vertices(edges).withColumn("label", F.col("id"))
     labels = _materialize(labels)
     for _ in range(rounds):
@@ -216,6 +315,40 @@ def _oriented(edges: DataFrame) -> DataFrame:
     return keyed.filter(lower).select("src", "dst")
 
 
+def _driver_triangles(s, d, n: int):
+    """Per-position triangle counts of the driver route: the ``_oriented``
+    edge set in positions, then every oriented wedge a→b→c looked up as the
+    edge a→c by ``searchsorted`` on the sorted oriented keys, at most
+    ``_WEDGE_CHUNK`` wedges at a time."""
+    keep = s != d
+    lo, hi = np.divmod(np.unique(np.minimum(s[keep], d[keep]) * n
+                                 + np.maximum(s[keep], d[keep])), n)
+    deg = np.bincount(lo, minlength=n) + np.bincount(hi, minlength=n)
+    flip = deg[lo] > deg[hi]          # equal degrees: lo < hi already orders by id
+    key = np.sort(np.where(flip, hi, lo) * n + np.where(flip, lo, hi))
+    a, b = np.divmod(key, n)          # sorted by a: out(x) = b[ptr[x]:ptr[x+1]]
+    ptr = np.searchsorted(a, np.arange(n + 1))
+    fan = ptr[b + 1] - ptr[b]         # wedges a→b→c through each oriented a→b
+    before = np.concatenate(([0], np.cumsum(fan)))
+    per = np.zeros(n, dtype=np.int64)
+    e0 = 0
+    while e0 < len(key):
+        e1 = max(e0 + 1, int(np.searchsorted(before, before[e0] + _WEDGE_CHUNK,
+                                             side="right")) - 1)
+        f = fan[e0:e1]
+        # wedge t of the chunk is wedge t - (before[e] - before[e0]) of its
+        # edge e, whose c's are b[ptr[b[e]]:ptr[b[e] + 1]]
+        c = b[np.repeat(ptr[b[e0:e1]] - (before[e0:e1] - before[e0]), f)
+              + np.arange(int(f.sum()))]
+        wa, wb = np.repeat(a[e0:e1], f), np.repeat(b[e0:e1], f)
+        wk = wa * n + c
+        hit = key[np.minimum(np.searchsorted(key, wk), len(key) - 1)] == wk
+        for x in (wa[hit], wb[hit], c[hit]):
+            per += np.bincount(x, minlength=n)
+        e0 = e1
+    return per
+
+
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count → single row (triangles long).
 
@@ -223,6 +356,11 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     oriented paths a→b→c closed by (a,c): each triangle counted exactly
     once. Two shuffle joins; the wedge join's per-middle-vertex fan-out is
     bounded by the oriented out-degree ≈ sqrt(2m) (see _oriented)."""
+    small = _small_graph(edges)
+    if small is not None:
+        vid, s, d = small
+        tri = int(_driver_triangles(s, d, len(vid)).sum()) // 3
+        return edges.sparkSession.createDataFrame([(tri,)], "triangles long")
     o = _oriented(edges)
     ab = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = o.select(F.col("src").alias("b"), F.col("dst").alias("c"))
@@ -233,7 +371,15 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 
 
 def triangle_count_per_vertex(edges: DataFrame) -> DataFrame:
-    """Per-vertex triangle participation → (id, triangles)."""
+    """Per-vertex triangle participation → (id, triangles), vertices in at
+    least one triangle only."""
+    small = _small_graph(edges)
+    if small is not None:
+        vid, s, d = small
+        per = _driver_triangles(s, d, len(vid))
+        nz = per > 0
+        return _driver_frame(edges, {"id": vid[nz], "triangles": per[nz]},
+                             "id {id}, triangles long")
     o = _oriented(edges)
     ab = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = o.select(F.col("src").alias("b"), F.col("dst").alias("c"))

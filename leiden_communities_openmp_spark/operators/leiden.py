@@ -94,19 +94,19 @@ def _partition_labels(spark: SparkSession, p: int) -> list[int]:
     return _PART_LABELS[p]
 
 
-def _range_partition_edges(spark: SparkSession, g: DataFrame, vid, weight, p: int,
-                           narrow: bool = True) -> DataFrame:
+def _range_partition_edges(spark: SparkSession, g: DataFrame, vid, weight, p: int) -> DataFrame:
     """CSR-style adjacency partitions: contiguous vertex-id ranges with
     ~equal total degree per partition. Web link graphs (and every renumbered
     super-graph) have strong id locality, so range placement keeps most of a
     vertex's neighborhood partition-local — the partition sweep then runs
     fresh Gauss-Seidel instead of damped stale rounds. Boundaries come from
     the driver's exact degree-cumsum percentiles (deterministic), applied as
-    a pure column expression (a P-way CASE over the cut ids — no join).
+    a pure column expression (a balanced comparison tree over the cut ids —
+    no join).
 
-    ``narrow``: ship (src,dst) as int32 and w as float32 through the
-    Arrow feed when ids fit — halves the per-round executor transfer. The
-    float32 edge weight matches the reference's TYPE=float input width
+    When ids fit, (src,dst) ship as int32 and w as float32 through the
+    Arrow feed — halves the per-round executor transfer. The float32 edge
+    weight matches the reference's TYPE=float input width
     (main.cxx:16-19); all accumulation stays float64 in the kernel."""
     import numpy as np
 
@@ -120,14 +120,24 @@ def _range_partition_edges(spark: SparkSession, g: DataFrame, vid, weight, p: in
     cuts = vid[np.minimum(bounds_idx, len(vid) - 1)]
     labels = _partition_labels(spark, p)
     # bucket(src) = #{j : src >= cuts[j]} (cuts ascending) — identical to
-    # "first i with src < cuts[i], else p-1" including duplicate-cut ties,
-    # but as ONE flat expression instead of a (p-1)-deep nested CASE whose
-    # driver-side Column construction + analysis measurably cost ~1-1.5s
-    # per pass at p=64 (pure serial intercept; the per-row work is the same
-    # O(p) integer compares either way)
-    bucket = F.aggregate(
-        F.lit([int(c) for c in cuts]), F.lit(0),
-        lambda acc, c: acc + F.when(F.col("src") >= c, 1).otherwise(0))
+    # "first i with src < cuts[i], else p-1" including duplicate-cut ties —
+    # as a balanced binary search: log2(p) compiled compares per row. A
+    # higher-order function (F.aggregate over the cuts) is interpreted, a
+    # lambda call per row per cut: at 1M vertices and p=64 it made the
+    # partition job ~4x slower; a (p-1)-deep nested CASE cost ~1-1.5s of
+    # driver-side Column construction and analysis per pass. The cuts are
+    # inlined literals: reading them with element_at from one array literal
+    # gives the same plan, as Catalyst constant-folds each element_at.
+
+    def bucket_in(lo: int, hi: int):
+        # bucket(src), given that it lies in [lo, hi]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(F.col("src") >= int(cuts[mid]), bucket_in(mid + 1, hi)) \
+            .otherwise(bucket_in(lo, mid))
+
+    bucket = bucket_in(0, len(cuts))
     # the tag must be LONG: _partition_labels solves pmod(hash(long), p)==i,
     # and Murmur3 hashes int32 and int64 differently. The old nested-CASE
     # emitted int32 tags, so the solved bucket→partition bijection silently
@@ -135,7 +145,7 @@ def _range_partition_edges(spark: SparkSession, g: DataFrame, vid, weight, p: in
     # 2-3 buckets was the move-round straggler on every witness run.
     expr = F.element_at(F.lit(labels).cast("array<long>"), bucket + F.lit(1))
     cols = [F.col("src"), F.col("dst"), F.col("w")]
-    if narrow and len(vid) and int(vid[-1]) < 2**31 - 1:
+    if int(vid[-1]) < 2**31 - 1:
         cols = [F.col("src").cast("int"), F.col("dst").cast("int"),
                 F.col("w").cast("float")]
     return (
@@ -1162,7 +1172,9 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     ``edges`` must be symmetric and deduplicated (sources/edges.py); an
     edge table whose (src, dst) and (dst, src) checksums differ raises
     ``ValueError`` at setup, and a distributed pass also raises on a dst
-    with no edges of its own.
+    with no edges of its own. Weights must be finite and non-negative: a
+    NaN, infinite or negative weight raises ``ValueError`` at setup, giving
+    the count of such rows. Zero weights are accepted.
     ``num_partitions`` fixes the sweep partitioning (determinism across core
     counts). ``driver_threshold``: aggregated graphs at or below this many
     edge rows finish on the driver with the deterministic kernel.
@@ -1202,20 +1214,28 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     edges0 = edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long"),
         F.col("w").cast("double"))
-    # A1 (main.cxx:61). The same single aggregation also fingerprints the
-    # symmetric-edge-table invariant (every (a,b) paired with (b,a)) that
-    # every route relies on: two salted order-sensitive checksums, forward
-    # vs reversed. A directed table whose every dst is also a src (e.g. a
-    # directed cycle) passes the in-task dst check but not these. Sum
-    # values are < 1e6 · |E| so they stay in int64 territory up to
-    # ~9×10^12 edges.
+    # A1 (main.cxx:61). The same single aggregation counts the rows whose
+    # weight is NaN, ±inf or negative (one NaN makes M NaN, and `M <= 0`
+    # is False for it; Spark orders NaN above +inf, so `w >= 0` would pass
+    # it), and fingerprints the symmetric-edge-table invariant (every
+    # (a,b) paired with (b,a)) that every route relies on: two salted
+    # order-sensitive checksums, forward vs reversed. A directed table whose
+    # every dst is also a src (e.g. a directed cycle) passes the in-task dst
+    # check but not these. Sum values are < 1e6 · |E| so they stay in int64
+    # territory up to ~9×10^12 edges.
+    w = F.col("w")
     _mrow = edges0.agg(
         F.sum("w").alias("sw"),
+        F.sum(F.when(F.isnan(w) | (w < 0) | (w == float("inf")), 1).otherwise(0)).alias("bad_w"),
         F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000))).alias("hf"),
         F.sum(F.pmod(F.xxhash64("dst", "src"), F.lit(1_000_000))).alias("hr"),
         F.sum(F.pmod(F.xxhash64("src", "dst", F.lit(7)), F.lit(1_000_000))).alias("hf7"),
         F.sum(F.pmod(F.xxhash64("dst", "src", F.lit(7)), F.lit(1_000_000))).alias("hr7"),
     ).collect()[0]
+    if _mrow["bad_w"]:
+        raise ValueError(
+            f"leiden_scale: {_mrow['bad_w']} edge rows have a NaN, infinite or negative "
+            "weight; weights must be finite and >= 0")
     if (_mrow["hf"], _mrow["hf7"]) != (_mrow["hr"], _mrow["hr7"]):
         raise ValueError(
             "leiden_scale: the edge table is not symmetric (some (src, dst) row has "

@@ -21,6 +21,19 @@ def spark():
     s.stop()
 
 
+def spark_jobs(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return (its result, the number
+    of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def load_golden(name: str, method: str):
     import json
     import pathlib

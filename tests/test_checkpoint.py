@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 from leiden_communities_openmp_spark.operators.materialize import materialize
 from leiden_communities_openmp_spark.plans.checkpoint import CheckpointManager
 
+from .conftest import spark_jobs as _jobs
+
 
 def _frames(spark):
     memb = materialize(spark.range(0, 500, numPartitions=3).select(
@@ -16,19 +18,6 @@ def _frames(spark):
         (F.col("id") % 500).alias("src"), ((F.col("id") * 13) % 500).alias("dst"),
         F.lit(1.0).alias("w")))
     return memb, edges
-
-
-def _jobs(spark, group, fn):
-    """Run ``fn`` under job group ``group``; return (its result, the number
-    of Spark jobs it started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_save_writes_once_and_reads_run_no_job(spark, tmp_path):

@@ -12,6 +12,7 @@ DataFrame rather than crash inside a plan.
 import pytest
 from pyspark.sql import functions as F
 
+from leiden_communities_openmp_spark.operators import companions
 from leiden_communities_openmp_spark.operators.companions import (
     connected_components_with_stats,
     label_propagation,
@@ -96,9 +97,11 @@ def test_bfs_unreachable_stays_absent(spark):
 # structure stress: high diameter, dangling mass, triangle-free
 # ---------------------------------------------------------------------------
 
-def test_connected_components_path_graph_logarithmic(spark):
-    # 256-vertex path: one component; large-star/small-star must converge
-    # in O(log n) rounds, not O(diameter) — the web-graph-diameter guard.
+def test_connected_components_path_graph_logarithmic(spark, monkeypatch):
+    # 256-vertex path: one component; large-star/small-star (the DataFrame
+    # route) must converge in O(log n) rounds, not O(diameter) — the
+    # web-graph-diameter guard.
+    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
     n = 256
     rows = [(i, i + 1, 1.0) for i in range(n - 1)] + \
            [(i + 1, i, 1.0) for i in range(n - 1)]
@@ -146,6 +149,18 @@ def test_label_propagation_two_cliques(spark):
     assert len({lab[i] for i in range(4)}) == 1
     assert len({lab[i] for i in range(10, 14)}) == 1
     assert lab[0] != lab[10]
+
+
+@pytest.mark.parametrize("test", [
+    test_pagerank_empty_graph, test_connected_components_empty_graph,
+    test_triangle_count_empty_graph, test_pagerank_mass_conserved_with_dangling,
+    test_triangle_free_bipartite, test_label_propagation_two_cliques,
+], ids=lambda t: t.__name__)
+def test_dataframe_route(spark, monkeypatch, test):
+    """The companion tests above run as written on the driver route (their
+    tables are small); here each runs again on the DataFrame route."""
+    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
+    test(spark)
 
 
 def test_leiden_rounds_strategy_empty_and_tiny(spark):

@@ -135,12 +135,15 @@ def test_aggregate_graph_broadcasts_membership(spark, sf):
     assert "BroadcastHashJoin" in plan
 
 
-def test_pagerank_plan_constant_size(spark, sf):
+def test_pagerank_plan_constant_size(spark, sf, monkeypatch):
     """Iterative loops must go through the stats-resetting materialize:
-    the per-iteration plan must not grow (no compounding lineage)."""
+    the per-iteration plan must not grow (no compounding lineage). Pinned on
+    the DataFrame route, the one that loops in Spark."""
+    from leiden_communities_openmp_spark.operators import companions
     from leiden_communities_openmp_spark.operators.companions import pagerank
     from leiden_communities_openmp_spark.queries import _lineitem_sym
 
+    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
     e = _lineitem_sym(spark, sf).limit(2000)
     r3 = pagerank(e, iterations=3)
     r6 = pagerank(e, iterations=6)
@@ -170,7 +173,7 @@ def test_aggregate_graph_salted_equals_plain_under_skew(spark, sf):
     assert (0, 0) in plain and plain[(0, 0)] > 0.5 * sum(plain.values())
 
 
-def test_triangle_orientation_survives_hub_skew(spark):
+def test_triangle_orientation_survives_hub_skew(spark, monkeypatch):
     """Round-4 verdict 'What's wrong' #2: triangle counting must orient by
     (degree, id), not id, or one high-degree hub keeps its whole degree as
     out-neighbors and the wedge join explodes deg(hub)^2.
@@ -179,10 +182,14 @@ def test_triangle_orientation_survives_hub_skew(spark):
     hub edge keeps the hub as source) plus a planted triangle. Degree
     orientation must (a) still count triangles exactly and (b) keep the
     hub's oriented out-degree at 0 — every spoke has degree 1 < 10^4, so
-    all hub edges must point INTO the hub."""
+    all hub edges must point INTO the hub. Pinned on the DataFrame route,
+    the one that runs the wedge join (tests/test_companions.py checks the
+    driver route on the same fixture)."""
+    from leiden_communities_openmp_spark.operators import companions
     from leiden_communities_openmp_spark.operators.companions import (
         _oriented, triangle_count, triangle_count_per_vertex)
 
+    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
     hub_deg = 10_000
     spokes = spark.range(1, hub_deg + 1).select(
         F.lit(0).alias("src"), F.col("id").alias("dst"))
@@ -253,3 +260,23 @@ def test_range_partition_bucket_bijection(spark):
     # contiguous ascending src ranges in pid order = bucket i -> partition i
     for a, b in zip(rows, rows[1:]):
         assert a.hi < b.lo
+
+
+def test_range_partition_bucket_is_compiled(spark):
+    """The range-bucket expression must compile: no lambda or higher-order
+    function in the partition projection. ``F.aggregate`` over the cuts runs
+    an interpreted lambda per row per cut — at 1M vertices and p=64 the
+    partition job took ~4x as long as with a compiled comparison tree."""
+    import numpy as np
+
+    from leiden_communities_openmp_spark.operators.leiden import (
+        _range_partition_edges)
+
+    n, p = 64_000, 64
+    df = spark.range(n).select(
+        F.col("id").alias("src"), ((F.col("id") * 7) % n).alias("dst"),
+        F.lit(1.0).alias("w"))
+    plan = _simple_plan(_range_partition_edges(spark, df, np.arange(n), np.ones(n), p))
+    project = [ln for ln in plan.splitlines() if "Project" in ln and "_part" in ln]
+    assert project, plan
+    assert not any("lambda" in ln for ln in project), project

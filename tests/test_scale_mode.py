@@ -167,6 +167,34 @@ def test_asymmetric_input_rejected(spark, rows, route):
         leiden_scale(spark, edges, LeidenOptions(), **_ROUTES[route])
 
 
+def _ring_weighted(spark, first):
+    """Symmetric 40-ring whose first ``len(first)`` edges (both rows of
+    each) carry the given weights, the rest 1.0."""
+    rows = []
+    for i in range(40):
+        w = first[i] if i < len(first) else 1.0
+        rows += [(i, (i + 1) % 40, w), ((i + 1) % 40, i, w)]
+    return spark.createDataFrame(rows, "src long, dst long, w double")
+
+
+@pytest.mark.parametrize("route", list(_ROUTES))
+def test_bad_weights_rejected(spark, route):
+    """NaN, +inf, -inf and negative weights are rejected at setup with the
+    count of bad rows, on every strategy and route (a NaN weight used to
+    make M NaN, pass the `M <= 0` test and silently compute garbage)."""
+    edges = _ring_weighted(spark, [float("nan"), float("inf"), float("-inf"), -1.0])
+    with pytest.raises(ValueError, match="^leiden_scale: 8 edge rows have a NaN"):
+        leiden_scale(spark, edges, LeidenOptions(), **_ROUTES[route])
+
+
+def test_zero_weights_accepted(spark):
+    """Zero weights pass the setup check and run through a distributed
+    sweep pass."""
+    res = leiden_scale(spark, _ring_weighted(spark, [0.0] * 4), LeidenOptions(),
+                       **_ROUTES["sweep"])
+    assert res.membership.count() == 40
+
+
 @pytest.mark.parametrize("name", ["dst-past-end", "dst-between-ids"])
 def test_sweep_task_rejects_dangling_dst(name):
     """The in-task check behind the setup checksums (hash sums can
