@@ -2,13 +2,14 @@
 PageRank, connected components, label propagation, triangle count
 (SURVEY.md §2.6).
 
-Routing, the same rule ``leiden_scale`` applies to its own input: every
-public operator first runs ONE bounded collect of (src, dst) through Arrow.
-A table of at most ``_DRIVER_EDGE_ROWS`` rows is finished in numpy on the
-driver and returned through ``spark.createDataFrame``; on such a table the
-DataFrame loops below cost a Spark job per step for milliseconds of work.
-A larger table runs the pure-DataFrame loops (no Python in their hot path),
-which are the scale path. Both routes give the same rows and schema
+Routing, the rule pages ingestion and ``leiden_scale`` apply too: every
+public operator first runs ONE bounded collect of (src, dst) through Arrow
+(``materialize.collect_small``). A table of at most
+``materialize.DRIVER_ROWS`` rows is finished in numpy on the driver and
+returned through ``spark.createDataFrame``; on such a table the DataFrame
+loops below cost a Spark job per step for milliseconds of work. A larger
+table runs the pure-DataFrame loops (no Python in their hot path), which
+are the scale path. Both routes give the same rows and schema
 (tests/test_companions.py pins the parity).
 
 Every operator is deterministic (fixed iteration counts or fixed-point with
@@ -23,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .materialize import collect_small
 from .materialize import materialize as _materialize_reset
 
 
@@ -40,11 +42,6 @@ def _materialize(df: DataFrame) -> DataFrame:
     return _materialize_reset(df)
 
 
-# Edge tables of at most this many rows take the driver route; read at call
-# time. It is leiden_scale's default driver_threshold, so a graph the Leiden
-# driver kernel finishes is finished on the driver here too. 0 forces the
-# DataFrame route, the same contract as driver_threshold=0.
-_DRIVER_EDGE_ROWS = 250_000
 # closed-wedge lookups per triangle chunk: bounds the driver's scratch arrays
 # (a few int64 arrays of this length) whatever the wedge count
 _WEDGE_CHUNK = 1 << 21
@@ -53,14 +50,11 @@ _WEDGE_CHUNK = 1 << 21
 def _small_graph(edges: DataFrame):
     """The routing probe: one bounded collect of (src, dst). Returns
     ``(vid, s, d)`` — the sorted distinct ids and each row's endpoints as
-    positions into them — when the table has at most ``_DRIVER_EDGE_ROWS``
-    rows, else None. Positions preserve id order, so every smallest-id rule
-    below compares positions."""
-    bound = _DRIVER_EDGE_ROWS
-    if bound <= 0:
-        return None
-    pdf = edges.select("src", "dst").limit(bound + 1).toPandas()
-    if len(pdf) > bound:
+    positions into them — when the table takes the driver route, else
+    None. Positions preserve id order, so every smallest-id rule below
+    compares positions."""
+    pdf = collect_small(edges.select("src", "dst"))
+    if pdf is None:
         return None
     src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
     vid = np.unique(np.concatenate([src, dst]))
@@ -360,7 +354,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     if small is not None:
         vid, s, d = small
         tri = int(_driver_triangles(s, d, len(vid)).sum()) // 3
-        return edges.sparkSession.createDataFrame([(tri,)], "triangles long")
+        return _driver_frame(edges, {"triangles": [tri]}, "triangles long")
     o = _oriented(edges)
     ab = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = o.select(F.col("src").alias("b"), F.col("dst").alias("c"))

@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from ._worker import task_entry
 from .aggregations import renumber_map_distributed, vertex_weights
 from .kernel import CsrGraph, LeidenOptions, leiden_exact
-from .materialize import materialize
+from .materialize import DRIVER_ROWS, materialize
 from .sweep import DriverState, sweep_partition
 
 _MOVES_SCHEMA = "id long, community_new long, gain double, blocked int"
@@ -166,7 +166,8 @@ class LeidenRunResult:
 
     Phase records carry ``phase``:
 
-    - ``setup``: ``seconds`` (edge projection, M and the symmetry check);
+    - ``setup``: ``seconds`` (edge projection, M, the weight and symmetry
+      checks and, under ``strategy="auto"``, the vertex estimate);
     - ``strategy`` (``strategy="auto"`` only): ``chosen``, ``v_estimate``;
     - ``final_modularity``: ``seconds`` (0-ish when the driver kernel's Q is
       returned).
@@ -1164,7 +1165,7 @@ class _RoundsPass(_PassStep):
 def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions | None = None,
                  refine: bool = True, checkpointer=None,
                  num_partitions: int = 32, local_iters: int = 20,
-                 driver_threshold: int = 250000,
+                 driver_threshold: int = DRIVER_ROWS,
                  driver_vertex_threshold: int = 20000,
                  strategy: str = "auto") -> LeidenRunResult:
     """Distributed Leiden (``refine=True``) / Louvain (``refine=False``).
@@ -1203,7 +1204,7 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
 
     t_setup = time.time()
     # NOT persisted: the raw edge relation is scanned a handful of times
-    # (M, strategy probe, pass-1 vertex weights, pass-1 repartition, and the
+    # (setup aggregate, pass-1 vertex weights, pass-1 repartition, and the
     # final modularity of a run whose last pass is distributed) and each
     # scan is column-pruned off the caller's source (parquet /
     # localCheckpoint). Caching it costs a full block-manager
@@ -1222,16 +1223,22 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
     # order-sensitive checksums, forward vs reversed. A directed table whose
     # every dst is also a src (e.g. a directed cycle) passes the in-task dst
     # check but not these. Sum values are < 1e6 · |E| so they stay in int64
-    # territory up to ~9×10^12 edges.
+    # territory up to ~9×10^12 edges. Under strategy="auto" it also takes
+    # the strategy probe: an HLL estimate of the vertex count (no distinct
+    # shuffle; HLL registers merge by max, so the estimate is the one a
+    # separate aggregation would give).
     w = F.col("w")
-    _mrow = edges0.agg(
+    setup_cols = [
         F.sum("w").alias("sw"),
         F.sum(F.when(F.isnan(w) | (w < 0) | (w == float("inf")), 1).otherwise(0)).alias("bad_w"),
         F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000))).alias("hf"),
         F.sum(F.pmod(F.xxhash64("dst", "src"), F.lit(1_000_000))).alias("hr"),
         F.sum(F.pmod(F.xxhash64("src", "dst", F.lit(7)), F.lit(1_000_000))).alias("hf7"),
         F.sum(F.pmod(F.xxhash64("dst", "src", F.lit(7)), F.lit(1_000_000))).alias("hr7"),
-    ).collect()[0]
+    ]
+    if strategy == "auto":
+        setup_cols.append(F.approx_count_distinct("src").alias("n_est"))
+    _mrow = edges0.agg(*setup_cols).collect()[0]
     if _mrow["bad_w"]:
         raise ValueError(
             f"leiden_scale: {_mrow['bad_w']} edge rows have a NaN, infinite or negative "
@@ -1248,8 +1255,7 @@ def leiden_scale(spark: SparkSession, edges: DataFrame, options: LeidenOptions |
 
     v_estimate: int | None = None
     if strategy == "auto":
-        # one cheap HLL aggregation (no distinct shuffle) decides the path
-        n_est = int(edges0.agg(F.approx_count_distinct("src").alias("n")).collect()[0]["n"])
+        n_est = int(_mrow["n_est"])
         strategy = "rounds" if n_est > _ROUNDS_VERTEX_THRESHOLD else "sweep"
         v_estimate = n_est
         metrics.append({"phase": "strategy", "chosen": strategy, "v_estimate": n_est})

@@ -16,10 +16,18 @@ leaf with default statistics (bounded, non-compounding). The cost is that
 Catalyst sees the leaf as default-sized and will not auto-broadcast it —
 iterative loops must place explicit ``F.broadcast`` hints on relations
 they know are small. The Leiden loops (operators/leiden.py) do. The
-companions' DataFrame loops (operators/companions.py; they run only on
-edge tables above ``_DRIVER_EDGE_ROWS``, smaller ones are finished on the
-driver) hint only PageRank's one-row dangling-mass join, so their other
-joins against materialized relations plan as shuffle joins.
+companions' DataFrame loops (operators/companions.py) hint only
+PageRank's one-row dangling-mass join, so their other joins against
+materialized relations plan as shuffle joins.
+
+The other way to finish a relation is not to materialize it at all.
+``collect_small`` is the routing rule the companions and pages ingestion
+(sources/pages.py) share: ONE bounded Arrow collect of the relation, which
+hands the caller a pandas frame when the relation has at most
+``DRIVER_ROWS`` rows. The caller then finishes in numpy on the driver and
+returns its result through ``spark.createDataFrame``; on such a relation a
+DataFrame plan costs a Spark job per step for milliseconds of work. Above
+the bound the caller runs its DataFrame plan, which is the scale path.
 """
 
 from __future__ import annotations
@@ -36,6 +44,25 @@ from pyspark.sql import DataFrame
 _KNOWN_GOOD_MAJORS = ("3.", "4.")
 
 _warned_fallback = False
+
+# Relations of at most this many rows take the driver route; read at call
+# time, so 0 (tests monkeypatch it) forces the DataFrame route. It is also
+# leiden_scale's default driver_threshold, so a graph the Leiden driver
+# kernel finishes is ingested and run through the companions on the driver
+# too.
+DRIVER_ROWS = 250_000
+
+
+def collect_small(df: DataFrame):
+    """The routing probe: ``df`` as a pandas frame when it has at most
+    ``DRIVER_ROWS`` rows, else None. One bounded collect through Arrow
+    (``limit(DRIVER_ROWS + 1)``); no count job first, which on a small
+    relation costs more than the collect."""
+    bound = DRIVER_ROWS
+    if bound <= 0:
+        return None
+    pdf = df.limit(bound + 1).toPandas()
+    return None if len(pdf) > bound else pdf
 
 
 def materialize(df: DataFrame) -> DataFrame:

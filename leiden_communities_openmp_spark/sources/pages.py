@@ -14,11 +14,22 @@ Pipeline:
      then symmetricized for the Leiden pipeline (main.cxx:94 analogue).
 
 No per-row Python: extraction uses pandas string vector ops inside
-``pandas_udf`` batches (Arrow transfer), ids/edges are pure DataFrame ops.
+``pandas_udf`` batches (Arrow transfer), and is materialized once.
+
+Routing (``ingest``), the rule the companions and ``leiden_scale`` apply
+too: after the extraction, ONE bounded collect of the (url, outlink) rows
+(``materialize.collect_small``). A crawl of at most
+``materialize.DRIVER_ROWS`` such rows gets its ids and edges in numpy on
+the driver and returned through ``spark.createDataFrame``; on it the
+DataFrame joins cost about ten Spark jobs for milliseconds of work. A larger
+crawl runs the DataFrame joins of ``build_edge_table`` (steps 2 and 3 as
+pure DataFrame ops), which are the scale path. Both routes give the same
+rows and schema (tests/test_ingestion.py pins the parity).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -26,6 +37,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ..operators._worker import task_entry
+from ..operators.materialize import collect_small
 
 _ANCHOR_RE = r"(?s)<a\s[^>]*>.*?</a>"
 _TAG_RE = r"(?s)<[^>]+>"
@@ -99,35 +111,77 @@ def url_ids(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
     )
 
 
-def build_edge_table(pages: DataFrame, keep_dangling: bool = False) -> tuple[DataFrame, DataFrame]:
-    """pages → (edges(src, dst, w), ids(url, id)).
+def _extracted(pages: DataFrame) -> DataFrame:
+    """(url, outlinks), materialized: the extraction UDF runs here once,
+    and every later plan reads the checkpoint (an unmaterialized plan
+    re-runs the UDF per branch; measured 5x slower at bench scale)."""
+    return extract(pages).select("url", "outlinks").localCheckpoint(eager=True)
 
-    - one row per (page, outlink) via explode (S2 analogue)
-    - targets not in the crawl are dropped unless ``keep_dangling``
-      (dangling urls get no vertex id — they were never crawled)
-    - exact dedup of repeated links (S5, w≡1 ⇒ dropDuplicates semantics)
-    """
-    # materialize the UDF output and the id map once: both feed two join
-    # branches below, and an unmaterialized plan re-runs the extraction UDF
-    # per branch (measured 5x slower at bench scale)
-    ext = extract(pages).select("url", "outlinks").localCheckpoint(eager=True)
+
+def _join_edges(pages: DataFrame, ext: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``build_edge_table`` from the materialized extraction ``ext``."""
     ids = url_ids(pages).localCheckpoint(eager=True)
     links = ext.select("url", F.explode("outlinks").alias("target"))
-    src = ids.withColumnRenamed("url", "url").withColumnRenamed("id", "src")
+    src = ids.withColumnRenamed("id", "src")
     dst = ids.select(F.col("url").alias("target"), F.col("id").alias("dst"))
-    e = links.join(src, "url").join(dst, "target", "left" if keep_dangling else "inner")
     edges = (
-        e.select("src", "dst")
-        .where(F.col("dst").isNotNull())
+        links.join(src, "url").join(dst, "target")
+        .select("src", "dst")
         .distinct()
         .withColumn("w", F.lit(1.0))
     )
     return edges, ids
 
 
+def build_edge_table(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """pages → (edges(src, dst, w), ids(url, id)) by DataFrame joins.
+
+    - one row per (page, outlink) via explode (S2 analogue)
+    - targets not in the crawl are dropped (they get no vertex id — they
+      were never crawled)
+    - exact dedup of repeated links (S5, w≡1 ⇒ dropDuplicates semantics)
+    """
+    return _join_edges(pages, _extracted(pages))
+
+
+def _driver_tables(spark, links: pd.DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``ingest``'s driver route, from the collected (url, target) rows of
+    every crawled page (target null for a page without outlinks). Ids and
+    edges equal the DataFrame route's: ids rank the sorted distinct urls
+    (Python orders str by code point, which is Spark's UTF-8 byte order; a
+    null url ranks first, as Spark sorts nulls first, and gets no edges),
+    and edges are the crawled (src, dst) pairs, deduplicated and
+    symmetricized."""
+    urls = links["url"]
+    crawled = pd.Index(np.unique(urls.dropna().to_numpy(dtype=object)))
+    null_url = bool(urls.isna().any())
+    s = crawled.get_indexer(urls)
+    d = crawled.get_indexer(links["target"])      # -1: null or not crawled
+    keep = (s >= 0) & (d >= 0)
+    n = len(crawled)
+    s, d = s[keep].astype(np.int64), d[keep].astype(np.int64)
+    key = np.unique(np.concatenate([s * n + d, d * n + s]))
+    src, dst = np.divmod(key, n)
+    off = int(null_url)
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": src + off, "dst": dst + off, "w": np.ones(len(key))}),
+        "src long, dst long, w double")
+    ids = spark.createDataFrame(
+        pd.DataFrame({"url": ([None] if null_url else []) + list(crawled),
+                      "id": np.arange(n + off, dtype=np.int64)}),
+        "url string, id long")
+    return edges, ids
+
+
 def ingest(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Full ingestion slice: deduplicated symmetric edge table + url ids."""
+    """Full ingestion slice: deduplicated symmetric edge table + url ids.
+    Finished on the driver when the crawl has at most
+    ``materialize.DRIVER_ROWS`` (url, outlink) rows (module docstring)."""
     from .edges import symmetricize_df
 
-    edges, ids = build_edge_table(pages)
+    ext = _extracted(pages)
+    links = collect_small(ext.select("url", F.explode_outer("outlinks").alias("target")))
+    if links is not None:
+        return _driver_tables(pages.sparkSession, links)
+    edges, ids = _join_edges(pages, ext)
     return symmetricize_df(edges), ids

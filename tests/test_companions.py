@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from leiden_communities_openmp_spark.operators import companions
+from leiden_communities_openmp_spark.operators import materialize
 from leiden_communities_openmp_spark.operators.companions import (
     connected_components, connected_components_with_stats, label_propagation, pagerank,
     triangle_count, triangle_count_per_vertex,
@@ -59,7 +59,7 @@ def test_connected_components_path_log_rounds(spark, monkeypatch):
     """High-diameter fixture: a 256-vertex path (diameter 255). The
     large-star/small-star alternation (the DataFrame route) must finish in
     O(log n) rounds — naive min-label exchange would need 255."""
-    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(materialize, "DRIVER_ROWS", 0)
     n = 256
     path = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst"), F.lit(1.0).alias("w"))
@@ -89,7 +89,7 @@ def test_pagerank_no_driver_collect_in_loop(spark, monkeypatch):
     every iteration: one extra full-|V| job per iteration)."""
     from pyspark.sql import DataFrame
 
-    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(materialize, "DRIVER_ROWS", 0)
     calls = {"n": 0}
     orig = DataFrame.collect
 
@@ -139,7 +139,7 @@ def test_lpa_deterministic(spark):
 def test_dataframe_route(spark, monkeypatch, test):
     """The companion tests above run as written on the driver route (their
     tables are small); here each runs again on the DataFrame route."""
-    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(materialize, "DRIVER_ROWS", 0)
     test(spark)
 
 
@@ -203,8 +203,8 @@ def test_routes_agree(spark, monkeypatch, name):
     each call runs exactly one Spark job: the bounded collect."""
     edges = ROUTE_INPUTS[name](spark).localCheckpoint(eager=True)
     got = {}
-    for route, bound in (("driver", companions._DRIVER_EDGE_ROWS), ("dataframe", 0)):
-        monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", bound)
+    for route, bound in (("driver", materialize.DRIVER_ROWS), ("dataframe", 0)):
+        monkeypatch.setattr(materialize, "DRIVER_ROWS", bound)
         for op, fn in COMPANIONS.items():
             out, jobs = spark_jobs(spark, f"route-{name}-{route}-{op}", lambda: fn(edges))
             if route == "driver":
@@ -221,16 +221,26 @@ def test_routes_agree(spark, monkeypatch, name):
 
 
 def test_route_bound_is_inclusive(spark, monkeypatch):
-    """A table of exactly ``_DRIVER_EDGE_ROWS`` rows takes the driver route
+    """A table of exactly ``materialize.DRIVER_ROWS`` rows takes the driver route
     (the bounded collect is the call's only job); one row more takes the
     DataFrame route."""
-    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 10)
+    monkeypatch.setattr(materialize, "DRIVER_ROWS", 10)
     for rows, driver in ((10, True), (11, False)):
         edges = spark.range(rows).select(
             F.col("id").alias("src"), ((F.col("id") + 1) % rows).alias("dst"),
             F.lit(1.0).alias("w")).localCheckpoint(eager=True)
         _, jobs = spark_jobs(spark, f"route-bound-{rows}", lambda: pagerank(edges, 2))
         assert (jobs == 1) == driver, (rows, jobs)
+
+
+def test_triangle_count_collects_without_job(spark):
+    """The driver route's one-row triangle count is a local relation:
+    collecting it starts no Spark job."""
+    edges = block_circulant(spark, N, B).localCheckpoint(eager=True)
+    tri = triangle_count(edges)
+    rows, jobs = spark_jobs(spark, "triangles-collect", tri.collect)
+    assert jobs == 0
+    assert rows[0]["triangles"] > 0
 
 
 def test_bfs_levels(spark):

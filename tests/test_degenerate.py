@@ -12,7 +12,7 @@ DataFrame rather than crash inside a plan.
 import pytest
 from pyspark.sql import functions as F
 
-from leiden_communities_openmp_spark.operators import companions
+from leiden_communities_openmp_spark.operators import materialize
 from leiden_communities_openmp_spark.operators.companions import (
     connected_components_with_stats,
     label_propagation,
@@ -101,7 +101,7 @@ def test_connected_components_path_graph_logarithmic(spark, monkeypatch):
     # 256-vertex path: one component; large-star/small-star (the DataFrame
     # route) must converge in O(log n) rounds, not O(diameter) — the
     # web-graph-diameter guard.
-    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(materialize, "DRIVER_ROWS", 0)
     n = 256
     rows = [(i, i + 1, 1.0) for i in range(n - 1)] + \
            [(i + 1, i, 1.0) for i in range(n - 1)]
@@ -114,7 +114,7 @@ def test_connected_components_path_graph_logarithmic(spark, monkeypatch):
 
 def test_pagerank_mass_conserved_with_dangling(spark):
     # 1→2, 2→3, 3 dangling: total rank must stay 1 (dangling mass is
-    # redistributed inside the plan, companions.py:55-58).
+    # redistributed every iteration, on both routes).
     e = _edges(spark, [(1, 2, 1.0), (2, 3, 1.0)])
     total = pagerank(e, iterations=4).agg(F.sum("rank")).collect()[0][0]
     assert total == pytest.approx(1.0, abs=1e-9)
@@ -159,7 +159,7 @@ def test_label_propagation_two_cliques(spark):
 def test_dataframe_route(spark, monkeypatch, test):
     """The companion tests above run as written on the driver route (their
     tables are small); here each runs again on the DataFrame route."""
-    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(materialize, "DRIVER_ROWS", 0)
     test(spark)
 
 

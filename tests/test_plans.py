@@ -139,11 +139,11 @@ def test_pagerank_plan_constant_size(spark, sf, monkeypatch):
     """Iterative loops must go through the stats-resetting materialize:
     the per-iteration plan must not grow (no compounding lineage). Pinned on
     the DataFrame route, the one that loops in Spark."""
-    from leiden_communities_openmp_spark.operators import companions
+    from leiden_communities_openmp_spark.operators import materialize
     from leiden_communities_openmp_spark.operators.companions import pagerank
     from leiden_communities_openmp_spark.queries import _lineitem_sym
 
-    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(materialize, "DRIVER_ROWS", 0)
     e = _lineitem_sym(spark, sf).limit(2000)
     r3 = pagerank(e, iterations=3)
     r6 = pagerank(e, iterations=6)
@@ -185,11 +185,11 @@ def test_triangle_orientation_survives_hub_skew(spark, monkeypatch):
     all hub edges must point INTO the hub. Pinned on the DataFrame route,
     the one that runs the wedge join (tests/test_companions.py checks the
     driver route on the same fixture)."""
-    from leiden_communities_openmp_spark.operators import companions
+    from leiden_communities_openmp_spark.operators import materialize
     from leiden_communities_openmp_spark.operators.companions import (
         _oriented, triangle_count, triangle_count_per_vertex)
 
-    monkeypatch.setattr(companions, "_DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(materialize, "DRIVER_ROWS", 0)
     hub_deg = 10_000
     spokes = spark.range(1, hub_deg + 1).select(
         F.lit(0).alias("src"), F.col("id").alias("dst"))

@@ -23,7 +23,7 @@ from leiden_communities_openmp_spark.operators.leiden import (
 from leiden_communities_openmp_spark.operators.sweep import sweep_partition
 from leiden_communities_openmp_spark.sources.mtx import read_mtx_spark
 
-from .conftest import GOLD_DIR, MTX_DIR
+from .conftest import GOLD_DIR, MTX_DIR, spark_jobs
 
 
 def _gold(name, method="leiden"):
@@ -38,6 +38,18 @@ def test_driver_fastpath_matches_oracle_quality(spark):
     edges, _ = read_mtx_spark(spark, os.path.join(MTX_DIR, "karate.mtx"))
     res = leiden_scale(spark, edges, LeidenOptions())
     assert math.isclose(res.modularity, _gold("karate")["modularity"], abs_tol=1e-6)
+
+
+def test_driver_route_job_count(spark):
+    """A strategy="auto" call that goes straight to the driver kernel runs
+    six Spark jobs: the setup aggregate (which also takes the strategy
+    probe's vertex estimate), the edge count, the kernel's collect and the
+    membership's materialization."""
+    edges, _ = read_mtx_spark(spark, os.path.join(MTX_DIR, "karate.mtx"))
+    edges = edges.localCheckpoint(eager=True)
+    res, jobs = spark_jobs(spark, "leiden-driver-route", lambda: leiden_scale(spark, edges))
+    assert any(m.get("strategy") == "driver-kernel" for m in res.metrics)
+    assert jobs == 6, jobs
 
 
 def test_distributed_sweep_quality_and_structure(spark):
