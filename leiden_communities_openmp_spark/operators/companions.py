@@ -3,9 +3,9 @@ PageRank, connected components, label propagation, triangle count
 (SURVEY.md §2.6).
 
 Routing, the rule pages ingestion and ``leiden_scale`` apply too: every
-public operator first runs ONE bounded collect of (src, dst) through Arrow
-(``materialize.collect_small``). A table of at most
-``materialize.DRIVER_ROWS`` rows is finished in numpy on the driver and
+public operator first collects at most ``materialize.DRIVER_ROWS + 1``
+rows of (src, dst) through Arrow (``materialize.collect_small``). A table
+of at most ``materialize.DRIVER_ROWS`` rows is finished in numpy on the driver and
 returned through ``spark.createDataFrame``; on such a table the DataFrame
 loops below cost a Spark job per step for milliseconds of work. A larger
 table runs the pure-DataFrame loops (no Python in their hot path), which
@@ -48,7 +48,7 @@ _WEDGE_CHUNK = 1 << 21
 
 
 def _small_graph(edges: DataFrame):
-    """The routing probe: one bounded collect of (src, dst). Returns
+    """The routing probe: one limited collect of (src, dst). Returns
     ``(vid, s, d)`` — the sorted distinct ids and each row's endpoints as
     positions into them — when the table takes the driver route, else
     None. Positions preserve id order, so every smallest-id rule below

@@ -20,14 +20,20 @@ companions' DataFrame loops (operators/companions.py) hint only
 PageRank's one-row dangling-mass join, so their other joins against
 materialized relations plan as shuffle joins.
 
-The other way to finish a relation is not to materialize it at all.
-``collect_small`` is the routing rule the companions and pages ingestion
-(sources/pages.py) share: ONE bounded Arrow collect of the relation, which
-hands the caller a pandas frame when the relation has at most
-``DRIVER_ROWS`` rows. The caller then finishes in numpy on the driver and
-returns its result through ``spark.createDataFrame``; on such a relation a
-DataFrame plan costs a Spark job per step for milliseconds of work. Above
-the bound the caller runs its DataFrame plan, which is the scale path.
+The other way to finish a relation is not to materialize it at all. The
+routing rule the companions and pages ingestion (sources/pages.py) share
+is ``fits_driver``, and ``DRIVER_ROWS`` is also ``leiden_scale``'s default
+``driver_threshold``: a relation of at most ``DRIVER_ROWS`` rows is
+finished in numpy on the driver and its result returned through
+``spark.createDataFrame``; on such a relation a DataFrame plan costs a
+Spark job per step for milliseconds of work. Above the bound the caller
+runs its DataFrame plan, which is the scale path. Each caller counts its
+own input rows (edge rows for Leiden and the companions, (url, outlink)
+rows for ingestion), so one graph may take different routes in different
+stages. ``collect_small`` is the companions' probe: a
+``limit(DRIVER_ROWS + 1)`` collect that returns the rows when they fit.
+Ingestion counts its rows in an aggregate first instead (see
+``collect_small`` for why).
 """
 
 from __future__ import annotations
@@ -45,24 +51,30 @@ _KNOWN_GOOD_MAJORS = ("3.", "4.")
 
 _warned_fallback = False
 
-# Relations of at most this many rows take the driver route; read at call
+# The driver-route bound, in rows of the caller's own input; read at call
 # time, so 0 (tests monkeypatch it) forces the DataFrame route. It is also
-# leiden_scale's default driver_threshold, so a graph the Leiden driver
-# kernel finishes is ingested and run through the companions on the driver
-# too.
+# leiden_scale's default driver_threshold.
 DRIVER_ROWS = 250_000
 
 
+def fits_driver(rows: int) -> bool:
+    """The routing rule: whether a relation of ``rows`` rows takes the
+    driver route."""
+    return 0 < DRIVER_ROWS and rows <= DRIVER_ROWS
+
+
 def collect_small(df: DataFrame):
-    """The routing probe: ``df`` as a pandas frame when it has at most
-    ``DRIVER_ROWS`` rows, else None. One bounded collect through Arrow
-    (``limit(DRIVER_ROWS + 1)``); no count job first, which on a small
-    relation costs more than the collect."""
-    bound = DRIVER_ROWS
-    if bound <= 0:
+    """``df`` as a pandas frame when it fits the driver route, else None, in
+    one Arrow collect of ``limit(DRIVER_ROWS + 1)`` and no count job first
+    (on a small relation a count costs more than the collect). Above the
+    bound that collect is not cheap: its map side keeps up to
+    ``DRIVER_ROWS + 1`` rows per partition and shuffles them to one
+    reducer, so a relation with fewer rows per partition is copied whole
+    before the limit applies."""
+    if DRIVER_ROWS <= 0:
         return None
-    pdf = df.limit(bound + 1).toPandas()
-    return None if len(pdf) > bound else pdf
+    pdf = df.limit(DRIVER_ROWS + 1).toPandas()
+    return pdf if fits_driver(len(pdf)) else None
 
 
 def materialize(df: DataFrame) -> DataFrame:

@@ -16,15 +16,16 @@ Pipeline:
 No per-row Python: extraction uses pandas string vector ops inside
 ``pandas_udf`` batches (Arrow transfer), and is materialized once.
 
-Routing (``ingest``), the rule the companions and ``leiden_scale`` apply
-too: after the extraction, ONE bounded collect of the (url, outlink) rows
-(``materialize.collect_small``). A crawl of at most
-``materialize.DRIVER_ROWS`` such rows gets its ids and edges in numpy on
-the driver and returned through ``spark.createDataFrame``; on it the
-DataFrame joins cost about ten Spark jobs for milliseconds of work. A larger
-crawl runs the DataFrame joins of ``build_edge_table`` (steps 2 and 3 as
-pure DataFrame ops), which are the scale path. Both routes give the same
-rows and schema (tests/test_ingestion.py pins the parity).
+Routing (``ingest``), by the rule the companions apply too
+(``materialize.fits_driver``): after the extraction, one narrow aggregate
+over it counts the (url, outlink) rows, a page without outlinks counting
+as one. A crawl of at most ``materialize.DRIVER_ROWS`` such rows is
+collected, and its ids and edges are built in numpy on the driver and
+returned through ``spark.createDataFrame``; on it the DataFrame joins cost
+about ten Spark jobs for milliseconds of work. A larger crawl is never
+collected: it runs the DataFrame joins of ``build_edge_table`` (steps 2 and
+3 as pure DataFrame ops), which are the scale path. Both routes give the
+same rows and schema (tests/test_ingestion.py pins the parity).
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ..operators._worker import task_entry
-from ..operators.materialize import collect_small
+from ..operators.materialize import fits_driver
 
 _ANCHOR_RE = r"(?s)<a\s[^>]*>.*?</a>"
 _TAG_RE = r"(?s)<[^>]+>"
@@ -180,8 +181,11 @@ def ingest(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     from .edges import symmetricize_df
 
     ext = _extracted(pages)
-    links = collect_small(ext.select("url", F.explode_outer("outlinks").alias("target")))
-    if links is not None:
+    # counted, not probed with a limit collect: above the bound that would
+    # shuffle up to DRIVER_ROWS + 1 rows per partition (materialize.collect_small)
+    rows = ext.agg(F.sum(F.greatest(F.size("outlinks"), F.lit(1)))).first()[0] or 0
+    if fits_driver(rows):
+        links = ext.select("url", F.explode_outer("outlinks").alias("target")).toPandas()
         return _driver_tables(pages.sparkSession, links)
     edges, ids = _join_edges(pages, ext)
     return symmetricize_df(edges), ids

@@ -140,8 +140,8 @@ def _counted(spark, pages):
 def test_routes_agree(spark, monkeypatch, name):
     """Both routes of ``ingest`` give the same edge and id rows and the same
     schemas; each runs the extraction UDF once per page, and the driver
-    route runs two Spark jobs (the extraction's checkpoint and the bounded
-    collect)."""
+    route runs four Spark jobs (the extraction's checkpoint, the row count's
+    two stages and the collect)."""
     pages = PAGE_INPUTS[name](spark).localCheckpoint(eager=True)
     n_pages = pages.count()
     got = {}
@@ -154,7 +154,7 @@ def test_routes_agree(spark, monkeypatch, name):
         i_rows = sorted(map(tuple, ids.collect()), key=lambda r: r[1])
         assert acc.value == n_pages, (route, acc.value)
         if route == "driver":
-            assert jobs == 2, jobs
+            assert jobs == 4, jobs
         got[route] = (edges.schema.simpleString(), ids.schema.simpleString(),
                       e_rows, i_rows)
     assert got["driver"] == got["dataframe"]
@@ -164,15 +164,26 @@ def test_routes_agree(spark, monkeypatch, name):
 
 def test_route_bound_is_inclusive(spark, monkeypatch):
     """A crawl of exactly ``materialize.DRIVER_ROWS`` (url, outlink) rows
-    takes the driver route (two jobs); one row more takes the DataFrame
-    route."""
+    takes the driver route; one row more takes the DataFrame route, and a
+    page without outlinks counts as one row."""
+    from leiden_communities_openmp_spark.sources import pages as pages_mod
+
     monkeypatch.setattr(materialize, "DRIVER_ROWS", 10)
-    for rows, driver in ((10, True), (11, False)):
-        urls = [f"http://ring.org/{i}" for i in range(5)]
-        pages = [_page(u, _links(urls[(i + 1) % 5], urls[(i + 2) % 5]))
-                 for i, u in enumerate(urls)]
-        if rows == 11:
-            pages[0] = _page(urls[0], _links(urls[1], urls[2], urls[3]))
-        df = spark.createDataFrame(pages, "url string, html binary").localCheckpoint(eager=True)
-        _, jobs = spark_jobs(spark, f"ingest-bound-{rows}", lambda: ingest(df))
-        assert (jobs == 2) == driver, (rows, jobs)
+    calls = []
+    driver_tables = pages_mod._driver_tables
+    monkeypatch.setattr(pages_mod, "_driver_tables",
+                        lambda *a: calls.append(1) or driver_tables(*a))
+    urls = [f"http://ring.org/{i}" for i in range(5)]
+    ring = [_page(u, _links(urls[(i + 1) % 5], urls[(i + 2) % 5]))
+            for i, u in enumerate(urls)]
+    cases = {
+        "10 links": (ring, True),
+        "10 links and a page without": (ring + [_page("http://ring.org/x", None)], False),
+        "11 links": ([_page(urls[0], _links(*urls[1:4]))] + ring[1:], False),
+    }
+    for case, (rows, driver) in cases.items():
+        calls.clear()
+        df = spark.createDataFrame(rows, "url string, html binary")
+        edges, _ = ingest(df)
+        assert edges.count() > 0
+        assert bool(calls) == driver, case

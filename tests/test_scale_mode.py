@@ -41,15 +41,17 @@ def test_driver_fastpath_matches_oracle_quality(spark):
 
 
 def test_driver_route_job_count(spark):
-    """A strategy="auto" call that goes straight to the driver kernel runs
-    six Spark jobs: the setup aggregate (which also takes the strategy
-    probe's vertex estimate), the edge count, the kernel's collect and the
-    membership's materialization."""
+    """strategy="auto" takes its vertex estimate from the setup aggregate:
+    a call that goes straight to the driver kernel runs no more Spark jobs
+    than the same call with the strategy given."""
     edges, _ = read_mtx_spark(spark, os.path.join(MTX_DIR, "karate.mtx"))
     edges = edges.localCheckpoint(eager=True)
-    res, jobs = spark_jobs(spark, "leiden-driver-route", lambda: leiden_scale(spark, edges))
-    assert any(m.get("strategy") == "driver-kernel" for m in res.metrics)
-    assert jobs == 6, jobs
+    jobs = {}
+    for strategy in ("auto", "sweep"):
+        res, jobs[strategy] = spark_jobs(spark, f"leiden-driver-{strategy}",
+                                         lambda: leiden_scale(spark, edges, strategy=strategy))
+        assert any(m.get("strategy") == "driver-kernel" for m in res.metrics)
+    assert jobs["auto"] == jobs["sweep"], jobs
 
 
 def test_distributed_sweep_quality_and_structure(spark):
